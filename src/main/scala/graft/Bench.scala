@@ -59,14 +59,7 @@ object Bench {
     // scratch) is shared with Verify via HarnessTuning — every knob is a
     // harness-scale latency call documented there; a 100 TB cluster keeps
     // the Spark defaults.
-    val spark = HarnessTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = HarnessTuning.benchBuilder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // The bounded post-aggregate whole-frame windows (q09 top-100 rank,
     // q17/q23 share-of-total, q46 renumber) each trip a per-partition

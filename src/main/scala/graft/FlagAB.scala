@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Scratch: generic interleaved conf-flag A/B for one declared query
-  * (the 05bc081 keep/revert protocol — both variants in ONE binary and
-  * window, palindromic order, per-variant min-of-reps comparator).
+/** Generic interleaved conf A/B for one declared query (the 05bc081
+  * keep/revert protocol — both variants in ONE binary and window,
+  * palindromic order, per-variant min-of-reps comparator), on the dev
+  * session (`HarnessTuning.devSession`). Any session conf can be
+  * flipped, e.g. a Spark knob or a kill switch such as
+  * `spark.graft.similarityJoin.rewrite`.
   *
   *   sbt "runMain graft.FlagAB <query> <confKey> <valueA> <valueB> [reps]"
   */
@@ -13,14 +14,7 @@ object FlagAB {
     val (name, key, va, vb) = (args(0), args(1), args(2), args(3))
     val reps = if (args.length > 4) args(4).toInt else 4
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = HarnessTuning(SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Quiet.windowExecWarnings()
+    val spark = HarnessTuning.devSession()
     def once(v: String): Double = {
       spark.conf.set(key, v)
       val t0 = System.nanoTime()

@@ -20,21 +20,23 @@ import java.nio.file.{Files, Paths}
   *    gets for free.
   *  - `preferSortMergeJoin=false`: shuffled-hash over sort-merge when a
   *    side fits per-partition memory; AQE's runtime sizes keep it safe.
-  *  - `bypassMergeThreshold=8` (r12, FloorGrid-measured): at 32 shuffle
-  *    partitions the bypass-merge writer opens 32 temp files per map
-  *    task (32 mappers → 1024 file creates per exchange); forcing the
-  *    serialized (Tungsten) writer makes each map task write one spill
-  *    file. Above 200 partitions — i.e. any cluster job — Spark already
-  *    picks the serialized writer, so this only changes the local floor.
+  *  - `bypassMergeThreshold=8` (r12, config-grid measured): at 32
+  *    shuffle partitions the bypass-merge writer opens 32 temp files per
+  *    map task (32 mappers → 1024 file creates per exchange); forcing
+  *    the serialized (Tungsten) writer makes each map task write one
+  *    spill file. Above 200 partitions — i.e. any cluster job — Spark
+  *    already picks the serialized writer, so this only changes the
+  *    local floor.
   *  - `spark.local.dir=/dev/shm` when present (r12): shuffle scratch on
   *    tmpfs. Suite shuffles are sub-MB, so file-create + fsync latency
   *    dominates, not bandwidth or capacity; Spark removes its blockmgr
   *    and spark-uuid scratch dirs on session stop. Clusters keep fast local
   *    disks — 100 TB shuffle spill does not fit in RAM.
   *
-  * Measured effect (FloorGrid, 9-query sample, median-of-3): shipped r11
-  * config 3.38 s → 1.85 s with the two r12 knobs; the minimal 2-stage
-  * shuffle job fell 0.33 s → 0.19 s.
+  * Measured effect (r12 config-grid probe, 9-query sample, median-of-3;
+  * retired, see OPTIMIZATION_r19.md "Retired flags and probes"): shipped
+  * r11 config 3.38 s → 1.85 s with the two r12 knobs; the minimal
+  * 2-stage shuffle job fell 0.33 s → 0.19 s.
   */
 object HarnessTuning {
   /** tmpfs is RAM-backed (typically capped at half of system memory), so
@@ -81,6 +83,35 @@ object HarnessTuning {
         }
       }
     }
+
+  /** The Bench session builder: `local[cpus]` with as many shuffle
+    * partitions, AQE on, UTC, the graft extensions and this object's
+    * floor tuning. */
+  def benchBuilder(cpus: String): SparkSession.Builder =
+    apply(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.ui.enabled", "false"))
+
+  /** The one session of the dev mains (QBench, FlagAB, PlanDump): the
+    * Bench session at `SPARK_GRAFT_CPUS` threads (default 32, as Bench),
+    * plus ad-hoc overrides `SPARK_GRAFT_CONF="k=v;k=v"` — so a timing, an
+    * A/B and a plan dump all run under the parallelism the bench uses. */
+  def devSession(): SparkSession = {
+    val overrides = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
+      .split(";").filter(_.contains("=")).map { kv =>
+        val Array(k, v) = kv.split("=", 2); (k, v)
+      }
+    val b = benchBuilder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = overrides.foldLeft(b)((b, kv) => b.config(kv._1, kv._2))
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    Quiet.windowExecWarnings()
+    spark
+  }
 
   def apply(b: SparkSession.Builder): SparkSession.Builder = {
     val tuned = b

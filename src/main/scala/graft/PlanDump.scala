@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
@@ -18,22 +17,10 @@ object PlanDump {
     val suffix = args(1) // "before" | "after"
     val names = args(2).split(",").toSeq
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    // ad-hoc conf overrides (QBench's device, r19): lets a conf-flagged
-    // variant's plan be dumped as the honest "before" evidence, e.g.
-    //   SPARK_GRAFT_CONF="spark.graft.similarityJoin.pruneFirst=false"
-    val overrides = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .split(";").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val b0 = HarnessTuning(SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-    val spark = overrides.foldLeft(b0)((b, kv) => b.config(kv._1, kv._2)).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Quiet.windowExecWarnings()
+    // the dev session: SPARK_GRAFT_CPUS threads, SPARK_GRAFT_CONF
+    // overrides, e.g. the pre-rewrite "before" evidence of a rule:
+    //   SPARK_GRAFT_CONF="spark.graft.similarityJoin.rewrite=false"
+    val spark = HarnessTuning.devSession()
     val dir = Paths.get(s"plans/$outTag")
     Files.createDirectories(dir)
     for (name <- names) {

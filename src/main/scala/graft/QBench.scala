@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev harness: time a subset of SparkEntry.queries under the exact Bench
   * session config. Usage: runMain graft.QBench q23_poll_standings[,q38_...]
   * [reps]. Prints construct/exec per rep and the median. Not part of the
@@ -13,27 +11,10 @@ object QBench {
       .getOrElse(Seq("q23_poll_standings"))
     val reps = if (args.length > 1) args(1).toInt else 5
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // ad-hoc conf overrides for floor experiments:
+    // the dev session: SPARK_GRAFT_CPUS threads (as Bench) and ad-hoc
+    // SPARK_GRAFT_CONF overrides for floor experiments, e.g.
     //   SPARK_GRAFT_CONF="spark.sql.files.maxPartitionBytes=2m;k=v"
-    val overrides = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .split(";").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    // r19: honor SPARK_GRAFT_CPUS like Bench does, so the 30× scale
-    // rehearsal can measure 8-vs-32-core ratios per heavy family with
-    // the same mechanism the driver's low-core bench leg uses
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = HarnessTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-    val spark = overrides.foldLeft(b0)((b, kv) => b.config(kv._1, kv._2))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Quiet.windowExecWarnings()
+    val spark = HarnessTuning.devSession()
     for (n <- names)  // warm: staging + codegen + page cache
       SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save()
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]

@@ -9,8 +9,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * `orderBy` as a range exchange, and RangePartitioner first runs a
   * SEPARATE sampling job over the child to pick bounds — for a 5-row
   * aggregate output that sampling pass re-runs the child and costs ~0.1 s
-  * of the trivial-query floor (measured r8, Probe): the sort tail was the
-  * single largest fixed cost left in the suite.
+  * of the trivial-query floor (measured r8 by a floor probe since
+  * retired — OPTIMIZATION_r19.md "Retired flags and probes"): the sort
+  * tail was the single largest fixed cost left in the suite.
   *
   * For a result whose cardinality is BOUNDED (post-aggregation group
   * counts, capped report sizes — everything here is ≤ ~50 k rows at any

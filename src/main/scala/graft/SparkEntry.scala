@@ -112,7 +112,7 @@ object SparkEntry {
     "q81_dedup_survivors" -> ((s, d) => TextDedup.q81DedupSurvivors(s, T(s, d))),
     // NOTE: q82 is EAGER — building its DataFrame runs the compaction
     // write job (the declared query IS a write→readback round-trip), so
-    // plan-only callers (schema dumps, FloorProbe construct timing) incur
+    // plan-only callers (schema dumps, construct-only timing) incur
     // a table rewrite ON EVERY construction. The staging-backed entries
     // (q21-q23/q32/q38/q53) also run jobs at construction, but only ONCE
     // per (session, sf dir) — the cold-cache staging materialization /

@@ -377,22 +377,13 @@ object Corpus {
     // chunk) exchange as two windows over the same partitioning; the
     // chunk-total aggregate then reads the already-partitioned window
     // output exchange-free, and only the chunk summary re-shuffles for
-    // the cross-chunk prefix. Values identical; conf-flagged for the
-    // interleaved A/B protocol.
-    val fused = docs.sparkSession.conf
-      .getOption("spark.graft.mix.fusedCum").forall(_ == "true")
-    val withinPrev =
-      if (fused) base
-        .withColumn("within_prev", coalesce(sum("n_tokens").over(wChunk), lit(0L)))
-        .withColumn("chunk_tokens",
-          sum("n_tokens").over(Window.partitionBy("lang", "chunk")))
-      else base
-        .withColumn("within_prev", coalesce(sum("n_tokens").over(wChunk), lit(0L)))
-    val chunkTotals =
-      if (fused) withinPrev.groupBy("lang", "chunk")
-        .agg(max("chunk_tokens").as("chunk_tokens"))
-      else base.groupBy("lang", "chunk")
-        .agg(sum("n_tokens").as("chunk_tokens"))
+    // the cross-chunk prefix.
+    val withinPrev = base
+      .withColumn("within_prev", coalesce(sum("n_tokens").over(wChunk), lit(0L)))
+      .withColumn("chunk_tokens",
+        sum("n_tokens").over(Window.partitionBy("lang", "chunk")))
+    val chunkTotals = withinPrev.groupBy("lang", "chunk")
+      .agg(max("chunk_tokens").as("chunk_tokens"))
     val wStream = Window.partitionBy("lang").orderBy("chunk")
       .rowsBetween(Window.unboundedPreceding, -1)
     val chunkOffsets = chunkTotals
@@ -671,26 +662,6 @@ object Corpus {
     // leading/trailing empty tokens that TextDedup.tokens filters — the
     // explicit word != '' restores the exact multiset (r18 optimization
     // round; CorpusSpec parity + family oracles pin it).
-    // r18-shape control for the r19 re-adjudication A/B (the judge's
-    // bisect ask on the q152/q155 driver regression): per-occurrence
-    // explode + count(*) instead of the histogram — value-identical
-    val tokenCounts = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.bpe.tokenCounts", "true") == "true"
-    if (!tokenCounts) {
-      val base0 =
-        if (withLang)
-          documents.select(col("lang"),
-            explode(TextDedup.tokens(col("text"))).as("word"))
-        else documents.select(explode(TextDedup.tokens(col("text"))).as("word"))
-      return base0
-        .where(!col("word").contains("|") && !col("word").contains("\\"))
-        .groupBy(keyCols: _*).agg(count(lit(1)).as("wc"))
-        .select(keyCols ++ Seq(col("wc"), concat(lit("|"),
-          expr("""array_join(transform(sequence(1, char_length(word)),
-                |  i -> substring(word, i, 1)), '||')""".stripMargin),
-          lit("||</w>|")).as("seq")): _*)
-        .localCheckpoint(false)
-    }
     val base =
       if (withLang)
         documents.select(col("lang"),
@@ -721,13 +692,10 @@ object Corpus {
     * flip is session-global while the loop runs; the harness constructs
     * queries single-threaded (bench/verify run one query at a time). */
   private def withStaticPlan[A](df: DataFrame)(f: => A): A = {
-    val spark = df.sparkSession
-    // identity when flagged off — the r19 re-adjudication A/B control
-    if (spark.conf.getOption("spark.graft.bpe.staticPlan").contains("false"))
-      return f
-    val was = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try f finally spark.conf.set("spark.sql.adaptive.enabled", was)
+    val conf = df.sparkSession.conf
+    val was = conf.get("spark.sql.adaptive.enabled")
+    try { conf.set("spark.sql.adaptive.enabled", "false"); f }
+    finally conf.set("spark.sql.adaptive.enabled", was)
   }
 
   /** Model-sized REDUCE fan-in for the training ROUNDS (r19): a round's
@@ -739,28 +707,28 @@ object Corpus {
     * the rounds' MAP parallelism, so it must keep the session fan-out
     * (its plan is frozen at its localCheckpoint, before this flip). All
     * round aggregates are exact integer sums — partition count cannot
-    * move a value (the CPUS=7 robustness sweep pins that). Conf-flagged
-    * (0 disables) for the interleaved A/B protocol. */
+    * move a value (the CPUS=7 robustness sweep pins that). */
   private def withModelReduce[A](spark: org.apache.spark.sql.SparkSession)(f: => A): A = {
-    val reduceParts = spark.conf
-      .getOption("spark.graft.train.reduceParts").getOrElse("4").toInt
     val wasN = spark.conf.get("spark.sql.shuffle.partitions")
-    if (reduceParts <= 0 || reduceParts >= wasN.toInt) return f
-    spark.conf.set("spark.sql.shuffle.partitions", reduceParts)
-    try f finally spark.conf.set("spark.sql.shuffle.partitions", wasN)
+    if (TrainReduceParts >= wasN.toInt) return f
+    try { spark.conf.set("spark.sql.shuffle.partitions", TrainReduceParts); f }
+    finally spark.conf.set("spark.sql.shuffle.partitions", wasN)
   }
+
+  /** Reduce fan-in of the model-sized training rounds, here and in
+    * Similarity's trainers: 4 won the r19 interleaved A/B (q172 −0.13 s
+    * min, OPTIMIZATION_r19.md). */
+  private[operators] val TrainReduceParts = 4
 
   private def bpeTrainCore(documents: DataFrame, rounds: Int)
   : (Seq[(Int, String, String, Long)], Seq[DataFrame], DataFrame) = withStaticPlan(documents) {
     val vocab0 = bpeVocab0(documents, withLang = false)
-    // vocabulary count observed on round 1's own job (adaptiveVocabParts);
+    // vocabulary count observed on round 1's own job (vocabCoalesced);
     // the observed frame serves ROUND 1 ONLY — later rounds read the
     // plain checkpoint (re-executing a CollectMetrics node would re-fire
     // the one-shot Observation)
     val obs = new org.apache.spark.sql.Observation()
-    var vocab =
-      if (adaptiveVocabPartsOn) vocab0.observe(obs, count(lit(1)).as("n"))
-      else vocab0
+    var vocab = vocab0.observe(obs, count(lit(1)).as("n"))
     val merges = collection.mutable.Buffer.empty[(Int, String, String, Long)]
     val states = collection.mutable.Buffer.empty[DataFrame]
     withModelReduce(documents.sparkSession) { for (r <- 1 to rounds) {
@@ -792,7 +760,7 @@ object Corpus {
       // round 1 materialized the checkpoint and its observe metric —
       // coalesce the remaining rounds' reads to the size-derived target
       // (over the PLAIN checkpoint, dropping the observe node)
-      if (r == 1 && adaptiveVocabPartsOn)
+      if (r == 1)
         vocab = vocabCoalesced(vocab0,
           obs.get.getOrElse("n", 0L).asInstanceOf[Long])
       vocab = vocab
@@ -810,21 +778,17 @@ object Corpus {
     * shuffle.partitions partitions regardless of vocabulary size — right
     * for the lexicon corpora (the CPU-dense pair explode wants every
     * core: an AQE-coalesced 2-partition checkpoint measured the rounds
-    * 2× slower, VocabProbe), pure scheduling overhead for a tiny
-    * vocabulary (q152's 31 words paid 8 rounds × 32 near-empty tasks).
-    * The vocabulary count rides round 1's own argmax job as an
-    * `observe` metric — zero extra jobs (a separate count job measured
-    * ~0.2 s on the lexicon trainers) — and rounds 2+ read the
+    * 2× slower, OPTIMIZATION_r19.md "Retired flags and probes"), pure
+    * scheduling overhead for a tiny vocabulary (q152's 31 words paid 8
+    * rounds × 32 near-empty tasks). The vocabulary count rides round
+    * 1's own argmax job as an `observe` metric — zero extra jobs (a
+    * separate count job measured ~0.2 s on the lexicon trainers) — and
+    * rounds 2+ read the
     * checkpoint through a narrow coalesce (no shuffle) capping the
     * round task count at ~1 task per 1024 words, a round's work being
     * microseconds per word. Partition count derives from MEASURED size
     * (guide §2: scale-adaptive, not a local constant): any real corpus
-    * clears the cap and keeps full parallelism. Conf-flagged for the
-    * interleaved A/B protocol. */
-  private def adaptiveVocabPartsOn: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.bpe.adaptiveVocabParts", "true") == "true"
-
+    * clears the cap and keeps full parallelism. */
   private def vocabCoalesced(vocab: DataFrame, n: Long): DataFrame = {
     val shuffleN =
       vocab.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
@@ -893,9 +857,7 @@ object Corpus {
     // round-1-only observe for the size-adaptive coalesce — see
     // bpeTrainCore
     val obs = new org.apache.spark.sql.Observation()
-    var vocab =
-      if (adaptiveVocabPartsOn) vocab0.observe(obs, count(lit(1)).as("n"))
-      else vocab0
+    var vocab = vocab0.observe(obs, count(lit(1)).as("n"))
     val merges =
       collection.mutable.Buffer.empty[(Int, String, String, String, Long)]
     val states = collection.mutable.Buffer.empty[DataFrame]
@@ -927,7 +889,7 @@ object Corpus {
       // round 1 materialized the checkpoint and its observe metric —
       // the remaining reads go through the size-derived coalesce of the
       // PLAIN checkpoint (dropping the observe node)
-      if (r == 1 && adaptiveVocabPartsOn)
+      if (r == 1)
         vocab = vocabCoalesced(vocab0,
           obs.get.getOrElse("n", 0L).asInstanceOf[Long])
       if (tops.nonEmpty) { // every language exhausted -> nothing to apply
@@ -1396,34 +1358,19 @@ object Corpus {
     // exchange) and only the ≤4096-rows-per-cell bucket summary is
     // re-shuffled for the cross-bucket prefix. The r18 shape read the
     // bucketed frame twice — two corpus-sized exchanges of the same
-    // rows. Values identical (same sums, same join). Conf-flagged for
-    // the interleaved A/B protocol.
-    if (d.sparkSession.conf
-        .getOption("spark.graft.mix.fusedCum").forall(_ == "true")) {
-      val wTot = Window.partitionBy("lang", "source", "bucket")
-      val wp = bucketed
-        .withColumn("within_prev", coalesce(sum("n_tokens").over(wB), lit(0L)))
-        .withColumn("bucket_tokens", sum("n_tokens").over(wTot))
-      val bOffsets = wp.groupBy("lang", "source", "bucket")
-        .agg(max("bucket_tokens").as("bucket_tokens"))
-        .withColumn("bucket_offset",
-          coalesce(sum("bucket_tokens").over(wS), lit(0L)))
-        .select("lang", "source", "bucket", "bucket_offset")
-      wp.join(bOffsets, Seq("lang", "source", "bucket"))
-        .withColumn("cum_before", col("bucket_offset") + col("within_prev"))
-        .drop("bucket_tokens")
-    } else {
-      val withinPrev = bucketed
-        .withColumn("within_prev", coalesce(sum("n_tokens").over(wB), lit(0L)))
-      val bOffsets = bucketed.groupBy("lang", "source", "bucket")
-        .agg(sum("n_tokens").as("bucket_tokens"))
-        .withColumn("bucket_offset",
-          coalesce(sum("bucket_tokens").over(wS), lit(0L)))
-        .select("lang", "source", "bucket", "bucket_offset")
-      withinPrev
-        .join(bOffsets, Seq("lang", "source", "bucket"))
-        .withColumn("cum_before", col("bucket_offset") + col("within_prev"))
-    }
+    // rows.
+    val wTot = Window.partitionBy("lang", "source", "bucket")
+    val wp = bucketed
+      .withColumn("within_prev", coalesce(sum("n_tokens").over(wB), lit(0L)))
+      .withColumn("bucket_tokens", sum("n_tokens").over(wTot))
+    val bOffsets = wp.groupBy("lang", "source", "bucket")
+      .agg(max("bucket_tokens").as("bucket_tokens"))
+      .withColumn("bucket_offset",
+        coalesce(sum("bucket_tokens").over(wS), lit(0L)))
+      .select("lang", "source", "bucket", "bucket_offset")
+    wp.join(bOffsets, Seq("lang", "source", "bucket"))
+      .withColumn("cum_before", col("bucket_offset") + col("within_prev"))
+      .drop("bucket_tokens")
   }
 
   /** [[mixPack]] over a PRE-COMPUTED per-document token frame (doc_id,
@@ -1442,31 +1389,21 @@ object Corpus {
       .localCheckpoint(false) // feeds the plan aggregate AND the keep pass
     // the plan frame is referenced TWICE (the broadcast cutoff and the
     // final audit join) — band-sized by construction (one row per
-    // (lang, source) cell), so materializing it once is free (r19;
-    // conf-flagged for the A/B)
-    val plan0 = mixPlan(d)
-    val plan =
-      if (docTokens.sparkSession.conf
-          .getOption("spark.graft.mix.planCheckpoint").forall(_ == "true"))
-        plan0.localCheckpoint(false)
-      else plan0
-    val kept0 = mixCumBefore(d)
+    // (lang, source) cell), so materializing it once is free (r19)
+    val plan = mixPlan(d).localCheckpoint(false)
+    val kept = mixCumBefore(d)
       // the plan is band-sized BY CONSTRUCTION (one row per (lang,
       // source) cell) — broadcast is safe at any corpus scale
       .join(broadcast(plan.select("lang", "source", "target_tokens")),
         Seq("lang", "source"))
       .where(col("cum_before") < col("target_tokens"))
       .select("doc_id", "lang", "source", "n_tokens")
-    // kept is referenced TWICE (the packer and the audit join) and each
-    // reference re-ran the whole cumulative-cutoff subtree — window
-    // exchange, bucket offsets and all (r19, the plan0 discipline one
-    // level up; the q184 executed plan showed the mixCumBefore DAG
-    // duplicated). Survivor-sized, one narrow materialization.
-    val kept =
-      if (docTokens.sparkSession.conf
-          .getOption("spark.graft.mix.keptCheckpoint").forall(_ == "true"))
-        kept0.localCheckpoint(false)
-      else kept0
+      // kept is referenced TWICE (the packer and the audit join) and each
+      // reference re-ran the whole cumulative-cutoff subtree — window
+      // exchange, bucket offsets and all (r19, the plan discipline one
+      // level up; the q184 executed plan showed the mixCumBefore DAG
+      // duplicated). Survivor-sized, one narrow materialization.
+      .localCheckpoint(false)
     val packed = packOffsets(kept.select("doc_id", "lang", "n_tokens"),
       seqTokens, chunkDocs)
     val audit = kept
@@ -1632,34 +1569,17 @@ object Corpus {
     // decontamination id set, the per-doc token censuses) remain
     // joins. Two corpus-sized doc_id exchanges removed; values
     // identical (the joins were 1:1 on doc_id; same expressions, same
-    // window). Conf-flagged for the interleaved A/B protocol —
-    // `false` rebuilds the r18 join shape.
-    val fusedGates = docs.sparkSession.conf
-      .getOption("spark.graft.pipeline.fusedGates").forall(_ == "true")
-    val univ0 =
-      if (fusedGates) {
-        TextAnalysis.gopherRules(docs, stopsByLang = Some(stopsByLang),
-            carry = Seq("lang", "source", "text"))
-          .withColumn("content_hash", sha2(col("text"), 256))
-          .drop("text") // project before the exchange (§2.3)
-          .withColumn("canon_id",
-            min("doc_id").over(Window.partitionBy("content_hash")))
-          .withColumn("is_dup", col("doc_id") =!= col("canon_id"))
-          .filter(col("doc_id") % 97 =!= 0)
-          .select(col("doc_id"), col("lang"), col("source"), col("is_dup"),
-            col("n_words"), qualityPass)
-      } else {
-        // r18 shape: map-side stages joined back on doc_id
-        val canon = contentDedupFlags(docs)
-        val quality = TextAnalysis
-          .gopherRules(docs, stopsByLang = Some(stopsByLang))
-          .select(col("doc_id"), col("n_words"), qualityPass)
-        docs.filter(col("doc_id") % 97 =!= 0)
-          .select("doc_id", "lang", "source")
-          .join(canon, Seq("doc_id"))
-          .join(quality, Seq("doc_id"))
-      }
-    val univ = univ0
+    // window).
+    val univ = TextAnalysis.gopherRules(docs, stopsByLang = Some(stopsByLang),
+        carry = Seq("lang", "source", "text"))
+      .withColumn("content_hash", sha2(col("text"), 256))
+      .drop("text") // project before the exchange (§2.3)
+      .withColumn("canon_id",
+        min("doc_id").over(Window.partitionBy("content_hash")))
+      .withColumn("is_dup", col("doc_id") =!= col("canon_id"))
+      .filter(col("doc_id") % 97 =!= 0)
+      .select(col("doc_id"), col("lang"), col("source"), col("is_dup"),
+        col("n_words"), qualityPass)
       .join(contaminated, Seq("doc_id"), "left")
       .withColumn("contaminated", coalesce(col("contaminated"), lit(false)))
       .join(tok.select("doc_id", "n_tokens"), Seq("doc_id"), "left")

@@ -163,25 +163,6 @@ object Graph {
     // the filtered view iff ≥1 base order produced it ⟺ it is in the
     // dedup of the base orders' own edge list (what r18 built).
     val spark = t.orders.sparkSession
-    // r18 shape (A/B control for the interleaved keep/revert protocol):
-    // each phase builds its own edge table from its own orders subset
-    if (spark.conf.getOption("spark.graft.q156.sharedEdges").contains("false")) {
-      def edgesOf(orders: DataFrame) = orders
-        .join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
-        .select(expr("o_custkey * 2").as("src"),
-          expr("l_suppkey * 2 + 1").as("dst"))
-      val baseOrders = t.orders
-        .filter(col("o_orderdate") < lit(WarmCutoff).cast("timestamp"))
-      val stored0 = pagerank(edgesOf(baseOrders), Iterations)
-        .localCheckpoint(false)
-      return warmPagerank(edgesOf(t.orders), WarmRounds, stored0)
-        .join(stored0.select(col("node"),
-          col("rank_ppb").as("base_rank_ppb")), Seq("node"), "left")
-        .filter(col("node") % 2 === 1)
-        .select(expr("node DIV 2").as("supplier"), col("rank_ppb"),
-          coalesce(col("base_rank_ppb"), lit(0L)).as("base_rank_ppb"))
-        .smallSort("supplier")
-    }
     val shuffleN = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val directed = t.orders
       .join(t.lineitem, col("o_orderkey") === col("l_orderkey"))

@@ -387,25 +387,26 @@ object Similarity {
     * while a training loop runs — the harness constructs queries
     * single-threaded. */
   private def withStaticPlan[A](df: DataFrame)(f: => A): A = {
-    val spark = df.sparkSession
-    val was = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // model-sized REDUCE fan-in (r19): every aggregate planned inside a
-    // training scope reduces to ≤ k·d model rows by contract, so the
-    // session-wide reduce fan-out is (cores − a few) near-empty reduce
-    // tasks per round job — pure scheduling overhead at ANY scale (the
-    // map side follows the input partitioning and is untouched; all
-    // training aggregates are exact integer sums, so partition count
-    // cannot move a value — the CPUS=7 robustness sweep pins that).
-    // Conf-flagged (0 disables) for the interleaved A/B protocol.
-    val reduceParts = spark.conf
-      .getOption("spark.graft.train.reduceParts").getOrElse("4").toInt
-    val wasN = spark.conf.get("spark.sql.shuffle.partitions")
-    if (reduceParts > 0 && reduceParts < wasN.toInt)
-      spark.conf.set("spark.sql.shuffle.partitions", reduceParts)
-    try f finally {
-      spark.conf.set("spark.sql.adaptive.enabled", was)
-      spark.conf.set("spark.sql.shuffle.partitions", wasN)
+    val conf = df.sparkSession.conf
+    // both previous values are read BEFORE either flip, so the finally
+    // restores the session whatever throws inside the scope
+    val was = conf.get("spark.sql.adaptive.enabled")
+    val wasN = conf.get("spark.sql.shuffle.partitions")
+    try {
+      conf.set("spark.sql.adaptive.enabled", "false")
+      // model-sized REDUCE fan-in (r19): every aggregate planned inside a
+      // training scope reduces to ≤ k·d model rows by contract, so the
+      // session-wide reduce fan-out is (cores − a few) near-empty reduce
+      // tasks per round job — pure scheduling overhead at ANY scale (the
+      // map side follows the input partitioning and is untouched; all
+      // training aggregates are exact integer sums, so partition count
+      // cannot move a value — the CPUS=7 robustness sweep pins that).
+      if (Corpus.TrainReduceParts < wasN.toInt)
+        conf.set("spark.sql.shuffle.partitions", Corpus.TrainReduceParts)
+      f
+    } finally {
+      conf.set("spark.sql.adaptive.enabled", was)
+      conf.set("spark.sql.shuffle.partitions", wasN)
     }
   }
 
@@ -457,12 +458,8 @@ object Similarity {
     * lit()+array()+call_function build the identical unresolved tree
     * object-by-object (same resolution, same constant folding, same
     * codegen — values bit-identical); the parser never runs.
-    * Conf-flagged for the interleaved A/B protocol. */
-  private def fastLitOn: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.train.fastLit", "true") == "true"
-
-  /** ONE Literal node (typedlit), not CreateArray over d element
+    *
+    * ONE Literal node (typedlit), not CreateArray over d element
     * literals: Dataset construction analyzes eagerly, and the analyzer
     * batches walking 65 nodes per centroid column × k columns × legs
     * were the measured residue after the parser was cut (GapProbe:
@@ -472,26 +469,19 @@ object Similarity {
   private def constArray(cs: Array[Long]): Column =
     lit(cs.map(_.toDouble))
 
-  /** vec_dot(<column>, <driver-held constant vector>) — see fastLitOn. */
+  /** vec_dot(<column>, <driver-held constant vector>) — see constArray. */
   private def vecDotLit(v: String, cs: Array[Long]): Column =
-    if (fastLitOn) call_function("vec_dot", col(v), constArray(cs))
-    else expr(s"vec_dot($v, " + cs.mkString("array(", "D, ", "D)") + ")")
+    call_function("vec_dot", col(v), constArray(cs))
 
   /** rd = qd − centroid(cluster): the residual via one array-of-arrays
     * lookup (k·d driver model state, constant-folded). Shared by the
-    * residual-PQ pipelines; parser-free under fastLitOn. */
+    * residual-PQ pipelines; parser-free (see constArray). */
   private def residualCol(ca: Array[Long], kCoarse: Int, d: Int,
-                          src: String = "qd"): Column =
-    if (fastLitOn) {
-      val cents = array((1 to kCoarse).map(j =>
-        constArray(ca.slice((j - 1) * d, j * d))): _*)
-      zip_with(col(src), element_at(cents, col("cluster")), (a, b) => a - b)
-    } else {
-      val centsLit = (1 to kCoarse).map(j =>
-        ca.slice((j - 1) * d, j * d).mkString("array(", "D, ", "D)"))
-        .mkString("array(", ", ", ")")
-      expr(s"zip_with($src, element_at($centsLit, cluster), (a, b) -> a - b)")
-    }
+                          src: String = "qd"): Column = {
+    val cents = array((1 to kCoarse).map(j =>
+      constArray(ca.slice((j - 1) * d, j * d))): _*)
+    zip_with(col(src), element_at(cents, col("cluster")), (a, b) => a - b)
+  }
 
   private def coarseDistCols(frame: DataFrame, ca: Array[Long],
                              d: Int, k: Int): DataFrame = {

@@ -70,7 +70,17 @@ class ExchangeAuditSpec extends SparkSpec {
     // band-sized budget aggregates + bounded-window cutoff, and the
     // final doc-order sort. A silent extra corpus shuffle (e.g. the
     // quality stage regrowing its r18-review self-join) raises this.
-    ("q187_multilex_pipeline", 22, "gates + survivor budgets + audit"))
+    ("q187_multilex_pipeline", 22, "gates + survivor budgets + audit"),
+    // q184: the fused mixPack shape (r19). The budget plan and the
+    // budget-cutoff survivor set enter as checkpoints (Scan
+    // ExistingRDD), so the cumulative cutoff's ONE shared (lang,
+    // source, bucket) prefix exchange runs once, inside the survivor
+    // checkpoint; what remains is the packer's fused (lang, chunk)
+    // window exchange + the per-lang chunk-offset prefix, the doc_id
+    // audit join, the (lang, source) audit aggregate/plan join and the
+    // serving sort. Re-duplicating the cutoff DAG (no survivor
+    // checkpoint) or splitting a fused prefix raises this.
+    ("q184_lex_mix_pack", 16, "packer prefix + audit join/agg over the checkpointed plan and survivors"))
 
   test("the tokenizer store's SERVING pass stays a batch-pass plan: " +
     "construction runs ZERO jobs and the executed exchange set is pinned") {

@@ -1,12 +1,16 @@
 package graft
 
+import graft.functions.TrigramSimSorted
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{And, Expression, GreaterThanOrEqual, Least, PosExplode}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join, Repartition}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.functions._
 
 /** The similarity-join optimizer rule: exactness vs the naive nested-loop
   * plan, plan shape (no product join after rewrite), multiplicity via row
-  * ids, edge semantics (short/null strings), and the opt-out conf. */
+  * ids, edge semantics (short/null strings), the opt-out conf, and q97's
+  * adjudicated plan shape (prune before merge, spread probe side). */
 class SimilarityJoinRewriteSpec extends SparkSpec {
 
   private val EnabledKey = graft.plans.SimilarityJoinRewrite.EnabledKey
@@ -130,5 +134,43 @@ class SimilarityJoinRewriteSpec extends SparkSpec {
       col("id_a") < col("id_b")).select("id_a", "id_b")
     val rows = withRule(on = true)(q.collect().map(r => (r.getLong(0), r.getLong(1))).toList)
     assert(rows == List((1L, 2L)))
+  }
+
+  test("q97 keeps its adjudicated shape: prune before every sim merge, " +
+    "small probe side spread round-robin") {
+    val plan = withRule(on = true)(SparkEntry.queries("q97_similarity_join")(
+      spark, "/root/testdata/sf0.001").queryExecution.optimizedPlan)
+    def hasSim(e: Expression) = e.exists(_.isInstanceOf[TrigramSimSorted])
+    def conjuncts(e: Expression): Seq[Expression] = e match {
+      case And(a, b) => conjuncts(a) ++ conjuncts(b)
+      case other => Seq(other)
+    }
+    // the re-applied predicate sits in ONE place above the gram equi-join
+    // (the rewrite's Filter, or the join condition pushdown folds it into)
+    val preds = plan.collect {
+      case j: Join if j.condition.exists(hasSim) => j.condition.get
+      case f: Filter if hasSim(f.condition) => f.condition
+    }
+    assert(preds.size == 1, plan.toString)
+    val cs = conjuncts(preds.head)
+    val prune = cs.indexWhere {
+      case GreaterThanOrEqual(_: Least, _) => true
+      case _ => false
+    }
+    val sims = cs.indices.filter(i => hasSim(cs(i)))
+    assert(prune >= 0 && sims.nonEmpty, preds.head.toString)
+    assert(sims.forall(prune < _),
+      s"positional prune at conjunct $prune must precede the sorted-merge " +
+        s"conjuncts at ${sims.mkString(",")}: ${preds.head}")
+    // the two gram-explode legs; the streamed side (tie → left) is below
+    // the 64 MiB spread threshold at sf0.001, so exactly one leg carries
+    // a shuffle=true round-robin Repartition to the session parallelism
+    val legs = plan.collect { case g: Generate if g.generator.isInstanceOf[PosExplode] => g }
+    assert(legs.size == 2, plan.toString)
+    val spread = legs.flatMap(_.child.collect {
+      case r: Repartition if r.shuffle => r.numPartitions
+    })
+    assert(spread == Seq(spark.conf.get("spark.sql.shuffle.partitions").toInt),
+      plan.toString)
   }
 }
