@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Tables.T
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Serve._
@@ -365,16 +365,6 @@ object Similarity {
     LloydState(qframe, ca, caIn, d, k)
   }
 
-  /** The Lloyd iteration engine on any frame carrying (vec_id, qd):
-    * hash-seeded initial centroids (the k vectors with the smallest
-    * (portable h60(seedTag), id); cluster ids are the rank in that
-    * order), then per round a map-side E-step against literal centroids
-    * and ONE (cluster, dim)-cell shuffle for the sign-split truncating
-    * means, ≤k·d rows collected (empty clusters keep their previous
-    * centroid). q142/q143/q147/q150 run it on the full 64-d quantized
-    * frame (seedTag 143); q157's product quantizer runs it once per
-    * 16-d subspace (seedTags 15700+s). Returns (final centroids,
-    * centroids the final E-step assigned against, d). */
   /** Static planning for the model-sized training jobs (r18
     * optimization round, the bpeTrainCore discipline): every Lloyd/PQ
     * round is a small aggregate ending in a ≤k·d-row collect, and under
@@ -384,8 +374,10 @@ object Similarity {
     * results); the declared query's SERVING plan is constructed after
     * training returns, outside this scope, so its adaptive plan (and
     * the PlanAudit/ExchangeAudit pins) are unaffected. Session-global
-    * while a training loop runs — the harness constructs queries
-    * single-threaded. */
+    * while a training loop runs: `graft.Verify` builds queries on a
+    * pool of 4 threads over one session, so the flip reaches whatever
+    * the other threads plan meanwhile (their values hold, their plans
+    * are not the benched ones) — ROADMAP item 3 tracks the scoped fix. */
   private def withStaticPlan[A](df: DataFrame)(f: => A): A = {
     val conf = df.sparkSession.conf
     // both previous values are read BEFORE either flip, so the finally
@@ -410,21 +402,30 @@ object Similarity {
     }
   }
 
+  /** The Lloyd iteration engine on any frame carrying (vec_id, qd):
+    * hash-seeded initial centroids (the k vectors with the smallest
+    * (portable h60(seedTag), id); cluster ids are the rank in that
+    * order), then per round a map-side E-step against literal centroids
+    * and ONE (cluster, dim)-cell shuffle for the sign-split truncating
+    * means, ≤k·d rows collected (empty clusters keep their previous
+    * centroid). q142/q143/q147/q150 run it on the full 64-d quantized
+    * frame (seedTag 143); the product quantizers train the same recipe
+    * per subspace, fused into one scan per round (pqTrainFused,
+    * ivfPqTrainFused). Returns (final centroids, centroids the final
+    * E-step assigned against, d). */
   private[graft] def lloydCore(qframe: DataFrame, k: Int, iterations: Int,
                                seedTag: Int): (Array[Long], Array[Long], Int) = withStaticPlan(qframe) {
-    val seedIds = qframe.select(col("vec_id"))
-      .withColumn("h", expr(TextDedup.h60(seedTag, "CAST(vec_id AS STRING)")))
+    // seed ids and their vectors in ONE job (a bounded top-k collect)
+    val seeds = qframe
+      .select(col("vec_id"), col("qd"),
+        expr(TextDedup.h60(seedTag, "CAST(vec_id AS STRING)")).as("h"))
       .orderBy("h", "vec_id").limit(k)
-      .collect().map(_.getLong(0))
-    val seedVecs = qframe
-      .filter(col("vec_id").isin(seedIds: _*))
-      .select("vec_id", "qd").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1).map(_.toLong).toArray)
-      .toMap
-    val d = seedVecs.valuesIterator.next().length
+      .select("qd").collect()
+      .map(_.getSeq[Double](0).map(_.toLong).toArray)
+    val d = seeds.head.length
     val c0 = new Array[Long](k * d)
-    seedIds.zipWithIndex.foreach { case (id, j) =>
-      System.arraycopy(seedVecs(id), 0, c0, j * d, d)
+    seeds.zipWithIndex.foreach { case (v, j) =>
+      System.arraycopy(v, 0, c0, j * d, d)
     }
     var ca = c0
     var caIn = c0
@@ -434,9 +435,7 @@ object Similarity {
       val rows = assignCols(qframe, ca, d, k)
         .select(col("cluster"), posexplode(col("qd")).as(Seq("dim", "v")))
         .groupBy("cluster", "dim")
-        .agg(expr("CASE WHEN sum(CAST(v AS BIGINT)) >= 0 " +
-          "THEN sum(CAST(v AS BIGINT)) DIV count(v) " +
-          "ELSE -((-sum(CAST(v AS BIGINT))) DIV count(v)) END").as("nc"))
+        .agg(TruncMean.as("nc"))
         .collect()
       rows.foreach(r =>
         next((r.getInt(0) - 1) * d + r.getInt(1)) = r.getLong(2))
@@ -445,16 +444,19 @@ object Similarity {
     (ca, caIn, d)
   }
 
-  /** The k squared-L2 distance columns s1..sk of (qd, qq) rows against
-    * centroid array `ca` riding as constant-folded literals — the
-    * map-side core shared by assignCols' argmin E-step and every
-    * probe-selection in-row sort (one definition so the distance form
-    * cannot drift between training and serving). */
+  /** A Lloyd cell's new coordinate from its member values `v`: the
+    * SIGN-SPLIT truncating mean (|s| DIV n negated back, so neither
+    * engine's native integer-division semantics is load-bearing). */
+  private val TruncMean = expr("CASE WHEN sum(CAST(v AS BIGINT)) >= 0 " +
+    "THEN sum(CAST(v AS BIGINT)) DIV count(v) " +
+    "ELSE -((-sum(CAST(v AS BIGINT))) DIV count(v)) END")
+
   /** Constant vector as a Column WITHOUT the SQL parser (r19): the
     * training/serving plans embed k·d centroid literals, and `expr()`
     * re-PARSES ~650 numeric tokens per training round — GapProbe
-    * measured 0.19 s/round of driver latency on the fused IVF-PQ
-    * trainer in CONSTRUCT alone, before analysis even starts.
+    * (since retired, OPTIMIZATION_r19.md) measured 0.19 s/round of
+    * driver latency on the fused IVF-PQ trainer in CONSTRUCT alone,
+    * before analysis even starts.
     * lit()+array()+call_function build the identical unresolved tree
     * object-by-object (same resolution, same constant folding, same
     * codegen — values bit-identical); the parser never runs.
@@ -483,6 +485,11 @@ object Similarity {
     zip_with(col(src), element_at(cents, col("cluster")), (a, b) => a - b)
   }
 
+  /** The k squared-L2 distance columns s1..sk of (qd, qq) rows against
+    * centroid array `ca` riding as constant-folded literals — the
+    * map-side core shared by assignCols' argmin E-step and every
+    * probe-selection in-row sort (one definition so the distance form
+    * cannot drift between training and serving). */
   private def coarseDistCols(frame: DataFrame, ca: Array[Long],
                              d: Int, k: Int): DataFrame = {
     // ONE select, not k chained withColumns (r18 optimization round):
@@ -733,11 +740,6 @@ object Similarity {
     * (the q143 build/search barrier). q154 audits this lever alone;
     * q158 feeds it into the IVF build — the composed serving path. */
   private[graft] def jlProjected(q: DataFrame, pDims: Int): DataFrame = {
-    def md5h60(s: String): Long = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex.take(15), 16)
-    }
     val d = 64
     val signs = Array.tabulate(pDims)(j => Array.tabulate(d)(i =>
       if (md5h60(s"154:$i:$j") % 2 == 0) 1L else -1L))
@@ -824,7 +826,7 @@ object Similarity {
             m: Int, ksub: Int, subIters: Int, topk: Int): DataFrame = {
     val qframe = quantized(embeddings).localCheckpoint(false)
     // coarse quantizer AND the m per-subspace codebooks train in
-    // lockstep — every training round is ONE tagged-union aggregate
+    // lockstep — every training round is ONE scan and ONE aggregate
     // job and all seed sets come from one job (the q152 lesson: the
     // JOBS, not the work, are the wall for model-sized state).
     // Bit-identical to lloyd() + m separate lloydCore runs: groups
@@ -1012,69 +1014,36 @@ object Similarity {
   /** q157's whole training stack in lockstep: the coarse quantizer
     * (64-d, seed tag 143 — the SAME model lloyd() trains for q143, by
     * identical arithmetic) and the m per-subspace codebooks (seed tags
-    * 15700+s). All seed sets come from ONE ranked-window job over a
-    * tagged union (the per-tag hash string matches TextDedup.h60 byte
-    * for byte); each shared training round is ONE (ss, cluster, dim)
-    * aggregate job — coarse rides tag -1, subspaces 0..m-1; rounds
-    * beyond subIters run coarse-only. Returns (coarse centroids,
-    * codebooks, d). */
+    * 15700+s) — same semantics as lloydCore(…, 143) plus m separate
+    * lloydCore runs over the sub-slices. All seed sets come from ONE
+    * scan (seedModels); each shared round is ONE scan and ONE job
+    * (roundMeans): the coarse E-step (assignCols) and the subspace
+    * encode (pqEncode) ride the same projection, and every dim feeds
+    * its coarse cell (ss −1) and, while r <= subIters, its subspace
+    * cell. Rounds beyond subIters run coarse-only. Returns (coarse
+    * centroids, codebooks, d). */
   private[graft] def ivfPqTrainFused(qframe: DataFrame, kCoarse: Int,
       coarseIters: Int, m: Int, ksub: Int,
       subIters: Int): (Array[Long], Seq[Array[Long]], Int) = withStaticPlan(qframe) {
     val d = qframe.select(expr("size(qd)")).head().getInt(0)
     val sub = d / m
-    def slices(s: Int) = qframe
-      .select(col("vec_id"), expr(s"slice(qd, ${s * sub + 1}, $sub)").as("qd"))
-      .withColumn("qq", expr("vec_dot(qd, qd)"))
-    def frame(ss: Int) = if (ss < 0) qframe else slices(ss)
-    def dim(ss: Int) = if (ss < 0) d else sub
-    def kOf(ss: Int) = if (ss < 0) kCoarse else ksub
-    def tagOf(ss: Int) = if (ss < 0) 143 else 15700 + ss
-    val tags = -1 until m
-    // ONE job for every seed set: rank by the per-tag portable hash
-    // inside each ss partition, fetch the seed (sub)vectors in the
-    // same pass
-    val seedRows = tags.map { ss =>
-      frame(ss).select(lit(ss).as("ss"), col("vec_id"), col("qd"),
-        expr(TextDedup.h60(tagOf(ss), "CAST(vec_id AS STRING)")).as("h"))
-    }.reduce(_ unionByName _)
-      .withColumn("rk", row_number().over(Window.partitionBy("ss")
-        .orderBy(col("h"), col("vec_id"))))
-      .filter(col("rk") <= (when(col("ss") < 0, kCoarse).otherwise(ksub)))
-      .select("ss", "rk", "qd")
-      .collect()
-    val cas = collection.mutable.Map(
-      tags.map(ss => ss -> new Array[Long](kOf(ss) * dim(ss))): _*)
-    seedRows.foreach { r =>
-      val (ss, j) = (r.getInt(0), r.getInt(1))
-      val v = r.getSeq[Double](2).map(_.toLong).toArray
-      System.arraycopy(v, 0, cas(ss), (j - 1) * dim(ss), dim(ss))
-    }
-    // shared rounds: one tagged aggregate job advances every model
-    // whose iteration budget is still open
+    val models = TrainModel(-1, 143, kCoarse, 0, d) +:
+      subspaceModels(m, sub, ksub, 15700)
+    var cas = seedModels(qframe, models)
     for (r <- 1 to math.max(coarseIters, subIters)) {
-      val live = tags.filter(ss =>
-        if (ss < 0) r <= coarseIters else r <= subIters)
-      val next = collection.mutable.Map(
-        live.map(ss => ss -> cas(ss).clone()): _*)
-      val assignedAll = live.map { ss =>
-        assignCols(frame(ss), cas(ss), dim(ss), kOf(ss))
-          .select(lit(ss).as("ss"), col("cluster"), col("qd"))
-      }.reduce(_ unionByName _)
-      val rows = assignedAll
-        .select(col("ss"), col("cluster"),
-          posexplode(col("qd")).as(Seq("dim", "v")))
-        .groupBy("ss", "cluster", "dim")
-        .agg(expr("CASE WHEN sum(CAST(v AS BIGINT)) >= 0 " +
-          "THEN sum(CAST(v AS BIGINT)) DIV count(v) " +
-          "ELSE -((-sum(CAST(v AS BIGINT))) DIV count(v)) END").as("nc"))
-        .collect()
-      rows.foreach(row => next(row.getInt(0))(
-        (row.getInt(1) - 1) * dim(row.getInt(0)) + row.getInt(2)) =
-        row.getLong(3))
-      live.foreach(ss => cas(ss) = next(ss))
+      val (coarse, subs) = (r <= coarseIters, r <= subIters)
+      val withCluster =
+        if (coarse) assignCols(qframe, cas(-1), d, kCoarse) else qframe
+      val assigned =
+        if (subs) pqEncode(withCluster, (0 until m).map(cas), sub, ksub, "qd")
+        else withCluster
+      val cells =
+        (if (coarse) Seq(struct(lit(-1).as("ss"), col("cluster"),
+          col("pos").as("dim"))) else Nil) ++
+          (if (subs) Seq(subspaceCell(m, sub)) else Nil)
+      cas = advance(cas, models, roundMeans(assigned, cells))
     }
-    (cas(-1), (0 until m).map(cas(_)), d)
+    (cas(-1), (0 until m).map(cas), d)
   }
 
   /** q160 — RESIDUAL IVF-PQ (`by_residual=true`, the actual FAISS
@@ -1108,12 +1077,12 @@ object Similarity {
     val (ca, _, d) = lloydCore(qframe, kCoarse, coarseIters, seedTag = 143)
     val sub = d / m
     require(sub * m == d, s"d=$d must split into $m subspaces")
-    val assigned = assignCols(qframe, ca, d, kCoarse)
-      .select(col("vec_id"), col("cluster"), col("qd"), col("qq"))
-      .localCheckpoint(false)
-    // residual frame: rd = qd − centroid(cluster) (residualCol)
-    val rframe = assigned
-      .withColumn("rd", residualCol(ca, kCoarse, d))
+    // the stored coarse index plus the residual rd = qd − centroid(cluster)
+    // (residualCol) in ONE projection and ONE checkpoint; the truth leg
+    // reads qd/qq from it too
+    val rframe = assignCols(qframe, ca, d, kCoarse)
+      .select(col("vec_id"), col("cluster"), col("qd"), col("qq"),
+        residualCol(ca, kCoarse, d).as("rd"))
       .localCheckpoint(false)
     val codebooks = pqTrainFused(
       rframe.select(col("vec_id"), col("rd").as("qd")),
@@ -1145,7 +1114,7 @@ object Similarity {
       .withColumn("rk", row_number().over(wS))
       .filter(col("rk") <= topk)
       .select("query_id", "vec_id")
-    val truth = assigned.select("vec_id", "qd", "qq")
+    val truth = rframe.select("vec_id", "qd", "qq")
       .join(broadcast(queries.select("query_id", "pqd", "pqq")),
         col("vec_id") =!= col("query_id"))
       .withColumn("l2",
@@ -1326,11 +1295,10 @@ object Similarity {
     val (ca, _, d) = lloydCore(qframe, kCoarse, coarseIters, seedTag = 143)
     val sub = d / m
     require(sub * m == d, s"d=$d must split into $m subspaces")
-    val assigned = assignCols(qframe, ca, d, kCoarse)
-      .select(col("vec_id"), col("cluster"), col("qd"), col("qq"))
-      .localCheckpoint(false)
-    val rframe = assigned
-      .withColumn("rd", residualCol(ca, kCoarse, d))
+    // coarse index + residual in ONE checkpoint (ivfPqResidual's frame)
+    val rframe = assignCols(qframe, ca, d, kCoarse)
+      .select(col("vec_id"), col("cluster"), col("qd"), col("qq"),
+        residualCol(ca, kCoarse, d).as("rd"))
       .localCheckpoint(false)
     // the SAME codebooks as q160 — one trained model serves both
     val codebooks = pqTrainFused(
@@ -1375,7 +1343,7 @@ object Similarity {
         .orderBy(col("adc").asc, col("vec_id").asc)))
       .filter(col("rk") <= topk)
       .select("query_id", "vec_id")
-    val truth = assigned.select("vec_id", "qd", "qq")
+    val truth = rframe.select("vec_id", "qd", "qq")
       .join(broadcast(probes0.select("query_id", "pqd", "pqq")),
         col("vec_id") =!= col("query_id"))
       .withColumn("l2",
@@ -1411,7 +1379,7 @@ object Similarity {
           .orderBy(col("adc").asc, col("vec_id").asc)))
         .filter(col("rk") <= rerank)
         .select("query_id", "vec_id")
-      val rrTop = assigned.select("vec_id", "qd", "qq")
+      val rrTop = rframe.select("vec_id", "qd", "qq")
         .join(broadcast(short), Seq("vec_id"))
         .join(broadcast(probes0.select("query_id", "pqd", "pqq")),
           Seq("query_id"))
@@ -1482,24 +1450,48 @@ object Similarity {
     * query slice vec_id < 10 — one query per cluster since cluster =
     * vec_id % 10) come from the real table, so corpus size still
     * scales with the SF. */
-  private[graft] def plantedEmbeddings(embeddings: DataFrame): DataFrame =
-    embeddings.select(col("vec_id"),
-      (col("vec_id") % 10).cast("int").as("label"),
-      expr(
-        """transform(sequence(0, 63), d -> CAST(CAST(
-          |  CAST(conv(substring(md5(concat('pc:', CAST(vec_id % 10 AS STRING),
-          |    ':', CAST(d AS STRING))), 1, 15), 16, 10) AS BIGINT)
-          |    % 2001 - 1000 +
-          |  CAST(conv(substring(md5(concat('ps:', CAST(d DIV 16 AS STRING),
-          |    ':', CAST(CAST(conv(substring(md5(concat('pg:',
-          |      CAST(d DIV 16 AS STRING), ':', CAST(vec_id AS STRING))),
-          |      1, 15), 16, 10) AS BIGINT) % 8 AS STRING),
-          |    ':', CAST(d AS STRING))), 1, 15), 16, 10) AS BIGINT)
-          |    % 201 - 100 +
-          |  CAST(conv(substring(md5(concat('pj:', CAST(vec_id AS STRING),
-          |    ':', CAST(d AS STRING))), 1, 15), 16, 10) AS BIGINT)
-          |    % 21 - 10
-          |  AS DOUBLE) / 1000.0D AS FLOAT))""".stripMargin).as("embedding"))
+  private[graft] def plantedEmbeddings(embeddings: DataFrame): DataFrame = {
+    // only the micro tier varies per (vec_id, d): the cluster and
+    // group-pattern terms come from the driver-built tables, the 4 group
+    // draws are one array per row — values identical to evaluating all
+    // four hashes per element (PlantedCorpusSpec pins it)
+    def h60(s: Column) = conv(substring(md5(s), 1, 15), 16, 10).cast("bigint")
+    val id = col("vec_id").cast("string")
+    val centers = lit(PlantedCenters)
+    val groupTerms = lit(PlantedGroupTerms)
+    embeddings
+      .select(col("vec_id"), (col("vec_id") % 10).cast("int").as("label"),
+        array((0 until 4).map(s => h60(concat(lit(s"pg:$s:"), id)) % 8): _*)
+          .as("groups"),
+        concat(lit("pj:"), id, lit(":")).as("pj"))
+      .select(col("vec_id"), col("label"),
+        transform(sequence(lit(0), lit(63)), d => ((
+          element_at(centers, ((col("vec_id") % 10) * 64 + d + 1).cast("int")) +
+          element_at(groupTerms, (element_at(col("groups"),
+            (d / 16).cast("int") + 1) * 64 + d + 1).cast("int")) +
+          h60(concat(col("pj"), d.cast("string"))) % 21 - 10
+        ).cast("double") / 1000.0).cast("float")).as("embedding"))
+  }
+
+  /** plantedEmbeddings' cluster term center(c, d) % 2001 − 1000 for
+    * c = vec_id % 10, at index c·64 + d — 640 driver longs. */
+  private[graft] lazy val PlantedCenters: Array[Long] =
+    Array.tabulate(10 * 64)(i => md5h60(s"pc:${i / 64}:${i % 64}") % 2001 - 1000)
+
+  /** plantedEmbeddings' group-pattern term sg(d DIV 16, g, d) % 201 − 100
+    * for group g, at index g·64 + d — 512 driver longs. */
+  private[graft] lazy val PlantedGroupTerms: Array[Long] =
+    Array.tabulate(8 * 64)(i =>
+      md5h60(s"ps:${i % 64 / 16}:${i / 64}:${i % 64}") % 201 - 100)
+
+  /** The portable hash on the driver, byte for byte the SQL
+    * `CAST(conv(substring(md5(s), 1, 15), 16, 10) AS BIGINT)` — the
+    * first 15 hex digits of the MD5 of the UTF-8 bytes. */
+  private[graft] def md5h60(s: String): Long = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    java.lang.Long.parseLong(hex.take(15), 16)
+  }
 
   /** q164 — raw IVF-PQ (q157's exact pipeline and parameters, only the
     * corpus swapped) on the planted-neighbor corpus: the recall columns
@@ -1668,49 +1660,99 @@ object Similarity {
   /** The m codebooks trained in lockstep over any (vec_id, qd) frame:
     * per subspace s, the Lloyd recipe over the `sub`-wide slice with
     * seed tag tagBase+s — same semantics as m separate `lloydCore`
-    * calls (the oracle unrolls them independently and hash-matches),
-    * but every round's means aggregate and the seed scan run as ONE
-    * job over a subspace-tagged union. q160 trains residual codebooks
-    * through this (tagBase 16000). */
+    * calls over the slices (PqTrainSpec pins it element for element),
+    * but the seed sets come from ONE scan (seedModels) and every round
+    * is ONE scan and ONE job: pqEncode's in-row argmin projects all m
+    * codes at once and roundMeans routes each dim to its subspace cell.
+    * q160 trains residual codebooks through this (tagBase 16000). */
   private[graft] def pqTrainFused(frame: DataFrame, m: Int, sub: Int,
       ksub: Int, iters: Int, tagBase: Int): Seq[Array[Long]] = withStaticPlan(frame) {
-    def slices(s: Int) = frame
-      .select(col("vec_id"), expr(s"slice(qd, ${s * sub + 1}, $sub)").as("qd"))
-      .withColumn("qq", expr("vec_dot(qd, qd)"))
-    val seedRows = (0 until m).map { s =>
-      slices(s).select(lit(s).as("ss"), col("vec_id"), col("qd"),
-        expr(TextDedup.h60(tagBase + s, "CAST(vec_id AS STRING)")).as("h"))
-    }.reduce(_ unionByName _)
+    val models = subspaceModels(m, sub, ksub, tagBase)
+    var cas = seedModels(frame, models)
+    for (_ <- 1 to iters) {
+      val assigned = pqEncode(frame, (0 until m).map(cas), sub, ksub, "qd")
+      cas = advance(cas, models, roundMeans(assigned, Seq(subspaceCell(m, sub))))
+    }
+    (0 until m).map(cas)
+  }
+
+  /** One model of a fused training scan: model tag `ss` (−1 the coarse
+    * quantizer, s subspace s), its seed tag, k centroids over the
+    * `width`-wide slice of qd starting at dim `from`. */
+  private final case class TrainModel(ss: Int, tag: Int, k: Int,
+                                      from: Int, width: Int)
+
+  private def subspaceModels(m: Int, sub: Int, ksub: Int,
+                             tagBase: Int): Seq[TrainModel] =
+    (0 until m).map(s => TrainModel(s, tagBase + s, ksub, s * sub, sub))
+
+  /** Every model's seed centroids from ONE scan and ONE job: each row
+    * fans out to one (ss, h60(tag)) pair per model, and per ss the k
+    * rows with the smallest (h, vec_id) — lloydCore's seeding, cluster
+    * ids the rank in that order — come back with their slice of qd.
+    * Returns each model's initial centroid array by ss. */
+  private def seedModels(frame: DataFrame,
+                         models: Seq[TrainModel]): Map[Int, Array[Long]] = {
+    val fan = array(models.map(md => struct(lit(md.ss).as("ss"),
+      expr(TextDedup.h60(md.tag, "CAST(vec_id AS STRING)")).as("h"),
+      lit(md.k).as("k"), lit(md.from + 1).as("from"),
+      lit(md.width).as("width"))): _*)
+    val rows = frame.select(col("vec_id"), col("qd"), inline(fan))
+      .select(col("ss"), col("h"), col("vec_id"), col("k"),
+        slice(col("qd"), col("from"), col("width")).as("qd"))
       .withColumn("rk", row_number().over(Window.partitionBy("ss")
         .orderBy(col("h"), col("vec_id"))))
-      .filter(col("rk") <= ksub)
+      // the literal bound lets the optimizer cut each map partition to
+      // its top rows per ss BEFORE the shuffle (a partial
+      // WindowGroupLimit); the per-model k then trims the smaller models
+      .filter(col("rk") <= models.map(_.k).max && col("rk") <= col("k"))
       .select("ss", "rk", "qd")
       .collect()
-    val cas = Array.fill(m)(new Array[Long](ksub * sub))
-    seedRows.foreach { r =>
-      val (s, j) = (r.getInt(0), r.getInt(1))
+    val cas = models.map(md => md.ss -> new Array[Long](md.k * md.width)).toMap
+    val width = models.map(md => md.ss -> md.width).toMap
+    rows.foreach { r =>
+      val ss = r.getInt(0)
       val v = r.getSeq[Double](2).map(_.toLong).toArray
-      System.arraycopy(v, 0, cas(s), (j - 1) * sub, sub)
+      System.arraycopy(v, 0, cas(ss), (r.getInt(1) - 1) * width(ss), width(ss))
     }
-    for (_ <- 1 to iters) {
-      val next = cas.map(_.clone())
-      val assignedAll = (0 until m).map { s =>
-        assignCols(slices(s), cas(s), sub, ksub)
-          .select(lit(s).as("ss"), col("cluster"), col("qd"))
-      }.reduce(_ unionByName _)
-      val rows = assignedAll
-        .select(col("ss"), col("cluster"),
-          posexplode(col("qd")).as(Seq("dim", "v")))
-        .groupBy("ss", "cluster", "dim")
-        .agg(expr("CASE WHEN sum(CAST(v AS BIGINT)) >= 0 " +
-          "THEN sum(CAST(v AS BIGINT)) DIV count(v) " +
-          "ELSE -((-sum(CAST(v AS BIGINT))) DIV count(v)) END").as("nc"))
-        .collect()
-      rows.foreach(r =>
-        next(r.getInt(0))((r.getInt(1) - 1) * sub + r.getInt(2)) = r.getLong(3))
-      (0 until m).foreach(s => cas(s) = next(s))
+    cas
+  }
+
+  /** The subspace cell of dim `pos` for pqEncode's code0..code{m-1}:
+    * (pos DIV sub, code(pos DIV sub), pos % sub). */
+  private def subspaceCell(m: Int, sub: Int): Column = {
+    val s = expr(s"CAST(pos DIV $sub AS INT)")
+    struct(s.as("ss"),
+      element_at(array((0 until m).map(i => col(s"code$i")): _*), s + 1)
+        .as("cluster"),
+      expr(s"pos % $sub").as("dim"))
+  }
+
+  /** One training round's means for every live model in ONE scan and
+    * ONE job: each dim `pos` of a row's qd (value v) feeds the `cells`
+    * — (ss, cluster, dim) structs over the row's assignment columns and
+    * pos: the model, the centroid the row is assigned to in it, the dim
+    * inside that model — and each cell's new coordinate is the
+    * truncating mean. Returns the (ss, cluster, dim, nc) rows. */
+  private def roundMeans(assigned: DataFrame, cells: Seq[Column]): Array[Row] =
+    assigned.select(col("*"), posexplode(col("qd")).as(Seq("pos", "v")))
+      .select(col("v"), inline(array(cells: _*)))
+      .groupBy("ss", "cluster", "dim")
+      .agg(TruncMean.as("nc"))
+      .collect()
+
+  /** The models after a round: each collected cell overwrites its
+    * coordinate; cells no row reached (empty clusters, models not
+    * trained this round) keep their previous value. */
+  private def advance(cas: Map[Int, Array[Long]], models: Seq[TrainModel],
+                      rows: Array[Row]): Map[Int, Array[Long]] = {
+    val next = cas.map { case (ss, c) => ss -> c.clone() }
+    val width = models.map(md => md.ss -> md.width).toMap
+    rows.foreach { r =>
+      val ss = r.getInt(0)
+      next(ss)((r.getInt(1) - 1) * width(ss) + r.getInt(2)) = r.getLong(3)
     }
-    cas.toSeq
+    next
   }
 
   def kmeansFixedPoint(embeddings: DataFrame, k: Int,
