@@ -32,6 +32,17 @@ import java.nio.file.{Files, Paths}
   *    dominates, not bandwidth or capacity; Spark removes its blockmgr
   *    and spark-uuid scratch dirs on session stop. Clusters keep fast local
   *    disks — 100 TB shuffle spill does not fit in RAM.
+  *  - the fork-free `file:` filesystem (`graft.io.LocalFs`): with no
+  *    `libhadoop` native library, Hadoop's local filesystem spawns a
+  *    `chmod` process per created file and a `readlink` process per
+  *    link-status lookup (two per checkpoint rename): 293 spawns for a
+  *    4-row q153 round trip, 4,531 for a `graft.Verify` pass at sf0.001,
+  *    ~4 ms each — most of what earlier rounds recorded as the
+  *    streaming micro-batch floor. `LocalFs` does both through
+  *    `java.nio` with the stock answers. Inert at 100 TB: cluster
+  *    checkpoints, state stores and sinks live on hdfs/s3a/abfs and
+  *    never reach the `file:` scheme. A single-host deployment that
+  *    checkpoints to local disk gets the same saving.
   *
   * Measured effect (r12 config-grid probe, 9-query sample, median-of-3;
   * retired, see OPTIMIZATION_r19.md "Retired flags and probes"): shipped
@@ -114,7 +125,7 @@ object HarnessTuning {
   }
 
   def apply(b: SparkSession.Builder): SparkSession.Builder = {
-    val tuned = b
+    val tuned = graft.io.LocalFs(b)
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
       .config("spark.shuffle.compress", "false")

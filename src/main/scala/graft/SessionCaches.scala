@@ -71,9 +71,10 @@ object TmpDirs {
       // (HarnessTuning.shmDir gates on free space and sweeps stale
       // graft_ trees from SIGKILLed JVMs — r12 advice): everything under
       // TmpDirs is MB-scale staging / checkpoint / round-trip state
-      // whose cost is file-create + fsync latency — streaming checkpoint
-      // commits fsync once per micro-batch — not capacity. Falls back to
-      // the JVM temp dir; a cluster deployment stages to real storage.
+      // whose cost is per-file latency, not capacity. That latency was
+      // mostly Hadoop's per-file chmod/readlink process spawns, not the
+      // file create or fsync; graft.io.LocalFs removes those. Falls back
+      // to the JVM temp dir; a cluster deployment stages to real storage.
       val d = (HarnessTuning.shmDir() match {
         case Some(shm) => java.nio.file.Files.createTempDirectory(shm, prefix)
         case None => java.nio.file.Files.createTempDirectory(prefix)

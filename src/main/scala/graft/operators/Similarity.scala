@@ -844,18 +844,23 @@ object Similarity {
     // codebook slice — every term an exact integer held as a double
     // ENCODE: per subspace an in-row argmin over the 8 literal
     // centroids (ties to the smallest code — the assignCols device);
-    // the checkpointed frame IS the PQ index a store persists
+    // the checkpointed frame IS the PQ index a store persists.
+    // Every frame the serving action reads is checkpointed EAGERLY: a
+    // lazy checkpoint first computed inside the AQE action truncates its
+    // lineage while a concurrent query-stage job's DAG walk reads it
+    // (NPE "RDD.dependencies() is null"; ServingCheckpointSpec). The
+    // other IVF-PQ pipelines below follow the same rule.
     val index = pqEncode(assigned, codebooks, sub, ksub, "qd")
       .select(col("vec_id") :: col("cluster") ::
         (0 until m).map(s => col(s"code$s")).toList: _*)
-      .localCheckpoint(false)
+      .localCheckpoint()
     // query side: the 4×8 ADC distance tables as array columns — 10
     // rows of driver-bounded model state, broadcast into the list join
     val queries = adcTables(
       assigned.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("cluster"),
           col("qd").as("pqd"), col("qq").as("pqq")),
-      codebooks, "pqd", sub, ksub).localCheckpoint(false)
+      codebooks, "pqd", sub, ksub).localCheckpoint()
     // serving leg: nprobe=1 list join, ADC = four table lookups summed
     val cand = index
       .join(broadcast(queries.select(col("query_id") :: col("cluster") ::
@@ -1091,14 +1096,14 @@ object Similarity {
     val index = pqEncode(rframe, codebooks, sub, ksub, "rd")
       .select(col("vec_id") :: col("cluster") ::
         (0 until m).map(s => col(s"code$s")).toList: _*)
-      .localCheckpoint(false)
+      .localCheckpoint()
     // query side: ADC tables over the query's OWN residual (nprobe=1:
     // the probed list is the query's assignment, so q − c_list = rd)
     val queries = adcTables(
       rframe.filter(col("vec_id") < 10)
         .select(col("vec_id").as("query_id"), col("cluster"),
           col("qd").as("pqd"), col("qq").as("pqq"), col("rd")),
-      codebooks, "rd", sub, ksub).drop("rd").localCheckpoint(false)
+      codebooks, "rd", sub, ksub).drop("rd").localCheckpoint()
     val cand = index
       .join(broadcast(queries.select(col("query_id") :: col("cluster") ::
         (0 until m).map(s => col(s"dt$s")).toList: _*)), Seq("cluster"))
@@ -1181,7 +1186,7 @@ object Similarity {
     // ENCODE the projected vectors; the index keeps qd/qq so the
     // exact-in-list audit leg reads the same frame (a store would
     // persist codes only — the full columns here ARE the audit input)
-    val index = pqEncode(assigned, codebooks, sub, ksub, "qd").localCheckpoint(false)
+    val index = pqEncode(assigned, codebooks, sub, ksub, "qd").localCheckpoint()
     // per-query nprobe nearest centroids in projected space (q158's
     // in-row struct sort) + the 4×8 ADC tables over the query's slices
     val withDists = coarseDistCols(pframe.filter(col("vec_id") < 10), ca, d, k)
@@ -1193,7 +1198,7 @@ object Similarity {
         (0 until nprobe).map(i => expr(s"ps[$i].c").as(s"probe${i + 1}"))
           .toList: _*)
     val probes = adcTables(probes0, codebooks, "pqd", sub, ksub)
-      .localCheckpoint(false)
+      .localCheckpoint()
     // the candidate frame both rankings read: union of the probed
     // lists, carrying codes (for ADC) and qd/qq (for the exact leg)
     val cand = index
@@ -1203,7 +1208,7 @@ object Similarity {
           .as("cluster") ::
         (0 until m).map(s => col(s"dt$s")).toList: _*)), Seq("cluster"))
       .filter(col("vec_id") =!= col("query_id"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     val nCand = cand.groupBy("query_id")
       .agg(count(lit(1)).as("n_candidates"))
     val adcRanked = cand
@@ -1235,7 +1240,7 @@ object Similarity {
         .orderBy(col("l2").asc, col("vec_id").asc)))
       .filter(col("rk") <= topk)
       .select("query_id", "vec_id")
-      .localCheckpoint(false) // two recall joins read it
+      .localCheckpoint() // two recall joins read it
     val rec = adcRanked
       .join(truthTop.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
       .groupBy("query_id")
@@ -1307,7 +1312,7 @@ object Similarity {
     val index = pqEncode(rframe, codebooks, sub, ksub, "rd")
       .select(col("vec_id") :: col("cluster") ::
         (0 until m).map(s => col(s"code$s")).toList: _*)
-      .localCheckpoint(false)
+      .localCheckpoint()
     // probe selection: nprobe nearest centroids per query (q147's
     // in-row struct sort against the coarse literals)
     val withDists = coarseDistCols(qframe.filter(col("vec_id") < 10), ca, d, kCoarse)
@@ -1318,7 +1323,7 @@ object Similarity {
         col("qq").as("pqq") ::
         (0 until nprobe).map(i => expr(s"ps[$i].c").as(s"probe${i + 1}"))
           .toList: _*)
-      .localCheckpoint(false)
+      .localCheckpoint()
     // PER-(query, list) ADC tables: the probe rows explode, each takes
     // the residual against ITS list's centroid, tables ride the row
     val probesX = adcTables(
@@ -1329,7 +1334,7 @@ object Similarity {
       codebooks, "rdl", sub, ksub)
       .select(col("query_id") :: col("cluster") ::
         (0 until m).map(s => col(s"dt$s")).toList: _*)
-      .localCheckpoint(false)
+      .localCheckpoint()
     val cand = index
       .join(broadcast(probesX), Seq("cluster"))
       .filter(col("vec_id") =!= col("query_id"))

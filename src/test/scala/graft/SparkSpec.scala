@@ -19,7 +19,9 @@ object SparkSpec {
   private var s: SparkSession = null
   def session: SparkSession = synchronized {
     if (s == null || s.sparkContext.isStopped) {
-      s = SparkSession.builder()
+      // the fork-free `file:` scheme Bench and Verify run on, so the
+      // checkpoint and state-store specs recover through it
+      s = graft.io.LocalFs(SparkSession.builder())
         .master("local[4]")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.session.timeZone", "UTC")
