@@ -43,6 +43,21 @@ import java.nio.file.{Files, Paths}
   *    checkpoints, state stores and sinks live on hdfs/s3a/abfs and
   *    never reach the `file:` scheme. A single-host deployment that
   *    checkpoints to local disk gets the same saving.
+  *  - one compiled class per generated source per JVM
+  *    (`spark.sql.artifact.isolation.enabled=false`): `CodeGenerator`
+  *    caches compiled classes by (thread context class loader, source),
+  *    and with isolation on each session's jobs carry its own artifact
+  *    state, so the executor runs that session's tasks under a class
+  *    loader of its own. Every `newSession()` (RoundTrip's) and every
+  *    session a `StreamExecution` clones therefore Janino-compiled and
+  *    re-JITted whole-stage code the JVM already held byte for byte: 16
+  *    compiles per q153 round trip, 0 once off. Nothing here adds a
+  *    session artifact (no `addArtifact`, no Spark Connect; the graft
+  *    functions come from `GraftExtensions` on the app classpath), so
+  *    isolation protected nothing. Not inert at 100 TB: a cluster saves
+  *    the same compiles on every executor at every stream start. Only a
+  *    multi-tenant Connect server whose sessions add their own jars or
+  *    classes keeps isolation on.
   *
   * Measured effect (r12 config-grid probe, 9-query sample, median-of-3;
   * retired, see OPTIMIZATION_r19.md "Retired flags and probes"): shipped
@@ -126,6 +141,7 @@ object HarnessTuning {
 
   def apply(b: SparkSession.Builder): SparkSession.Builder = {
     val tuned = graft.io.LocalFs(b)
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
       .config("spark.shuffle.compress", "false")

@@ -2,12 +2,14 @@ package graft
 
 /** Dev harness: time a subset of SparkEntry.queries under the exact Bench
   * session config. Usage: runMain graft.QBench q23_poll_standings[,q38_...]
-  * [reps]. Prints construct/exec per rep and the median. Not part of the
-  * driver contract — Bench.scala is the official artifact. */
+  * [reps] (`all` names every registered query). Prints construct/exec
+  * and the Janino compiles of each warm rep, and the median. Not part of
+  * the driver contract — Bench.scala is the official artifact. */
 object QBench {
   def main(args: Array[String]): Unit = {
     val names = args.headOption
-      .map(_.split(",").toSeq)
+      .map(a => if (a == "all") SparkEntry.queries.keys.toSeq.sorted
+        else a.split(",").toSeq)
       .getOrElse(Seq("q23_poll_standings"))
     val reps = if (args.length > 1) args(1).toInt else 5
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -19,14 +21,18 @@ object QBench {
       SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save()
     val samples = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
+    // every compile a warm rep runs is one the JVM's class cache missed
+    def compiles() = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME.getCount
     for (r <- 1 to reps; n <- names) {
+      val c0 = compiles()
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(n)(spark, sfDir)
       val t1 = System.nanoTime()
       df.write.mode("overwrite").format("noop").save()
       val t2 = System.nanoTime()
       samples(n) = samples(n) :+ (t2 - t0) / 1e9
-      println(f"[qbench] $n rep$r construct ${(t1 - t0) / 1e9}%.3f exec ${(t2 - t1) / 1e9}%.3f")
+      println(f"[qbench] $n rep$r construct ${(t1 - t0) / 1e9}%.3f exec ${(t2 - t1) / 1e9}%.3f compiles ${compiles() - c0}")
     }
     for (n <- names) {
       val s = samples(n).sorted

@@ -459,12 +459,14 @@ object Graph {
     // materialize them (the seed count and the checkpoint RDDs) DO run
     // inside it, deliberately, so their leaves plan statically. The
     // conf flip is session-global: a query constructed CONCURRENTLY on
-    // the same session during this window would also plan AQE-off —
-    // acceptable here because the harness constructs queries
-    // single-threaded (bench/verify run one query at a time); a cluster
-    // deployment would instead read a bucketed edge table, which
-    // carries the same partitioning guarantee natively with AQE on, or
-    // scope the flip via session.cloneSession().
+    // the same session during this window also plans AQE-off.
+    // `graft.Bench` builds one query at a time, but `graft.Verify`
+    // builds queries on a pool of 4 threads over one session, so the
+    // flip reaches whatever the other threads plan meanwhile (their
+    // values hold, their plans are not the benched ones) — ROADMAP
+    // item 3 tracks the scoped fix. A cluster deployment would instead
+    // read a bucketed edge table, which carries the same partitioning
+    // guarantee natively with AQE on.
     val spark = directed.sparkSession
     val shuffleN = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val edges = withStaticPlan(spark) {

@@ -939,9 +939,11 @@ object Similarity {
     val pframe = proj.select(col("vec_id"), col("pd").as("qd"),
       col("pq").as("qq"))
     val (ca, _, d) = lloydCore(pframe, k, iters, seedTag = 158)
+    // assigned, probes and truth are checkpointed EAGERLY, like the
+    // IVF-PQ serving frames (ivfPq): the serving action reads all three
     val assigned = assignCols(pframe, ca, d, k)
       .select(col("vec_id"), col("cluster"), col("qd"), col("qq"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     // per-query nprobe nearest centroids in projected space (q147's
     // in-row struct sort — 10 rows, no shuffle)
     val withDists = coarseDistCols(pframe.filter(col("vec_id") < 10), ca, d, k)
@@ -952,7 +954,7 @@ object Similarity {
         col("qq").as("pqq") ::
         (0 until nprobe).map(i => expr(s"ps[$i].c").as(s"probe${i + 1}"))
           .toList: _*)
-      .localCheckpoint(false)
+      .localCheckpoint()
     val cosine = round(
       expr("vec_dot(qd, pqd)") / (sqrt(col("qq")) * sqrt(col("pqq"))), 6)
     // composed serving leg: union of the probed lists, projected cosine
@@ -991,7 +993,7 @@ object Similarity {
       .withColumn("rk", row_number().over(wS))
       .filter(col("rk") <= topk)
       .select("query_id", "vec_id")
-      .localCheckpoint(false) // consumed by BOTH recall joins
+      .localCheckpoint() // consumed by BOTH recall joins
     val rec = searched
       .join(truth.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
       .groupBy("query_id")

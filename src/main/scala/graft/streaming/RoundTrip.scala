@@ -24,7 +24,10 @@ import org.apache.spark.sql.streaming.Trigger
   * could clone the session conf inside a set→restore window and either
   * lose its REQUIRED no-data flush batch (q92/q102) or permanently
   * downgrade the shared session's shuffle partitioning when two
-  * set/restore pairs interleaved.
+  * set/restore pairs interleaved. The isolation scopes confs only:
+  * sessions are built with artifact isolation off (`HarnessTuning`), so
+  * this session and the one the stream clones reuse the compiled
+  * classes the JVM already holds instead of recompiling them per run.
   *
   * `noDataBatches = false` is ONLY for queries whose every output row is
   * emitted inside a data batch (immediate-emission dedup/joins) — the

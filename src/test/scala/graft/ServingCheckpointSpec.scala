@@ -6,13 +6,14 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The IVF-PQ pipelines materialize every checkpointed frame before
-  * their serving action runs. A lazy `localCheckpoint(false)` frame first
-  * computed inside the action races: the job that materializes it
-  * truncates its lineage while the DAG scheduler walks the same lineage
-  * for a concurrent AQE query-stage job ("RDD.dependencies() is null",
-  * seen once in 270 benchmark runs of q165). So the serving action must
-  * store no RDD block: every checkpoint it reads already exists. */
+/** The IVF and IVF-PQ pipelines materialize every checkpointed frame
+  * before their serving action runs. A lazy `localCheckpoint(false)`
+  * frame first computed inside the action races: the job that
+  * materializes it truncates its lineage while the DAG scheduler walks
+  * the same lineage for a concurrent AQE query-stage job
+  * ("RDD.dependencies() is null", seen once in 270 benchmark runs of
+  * q165). So the serving action must store no RDD block: every
+  * checkpoint it reads already exists. */
 class ServingCheckpointSpec extends SparkSpec {
 
   private lazy val planted500 = Similarity.plantedEmbeddings(
@@ -49,5 +50,10 @@ class ServingCheckpointSpec extends SparkSpec {
       "jlIvfPq" -> Similarity.jlIvfPq(planted500, 16, 10, 3, 2, 4, 8, 2, 5))
     for ((name, df) <- pipelines)
       assert(blocksStoredBy(df).isEmpty, name)
+  }
+
+  test("q158/q167's JL-IVF serving action stores no checkpoint block") {
+    val jlIvf = Similarity.jlIvf(planted500, 16, 10, 3, 2, 5)
+    assert(blocksStoredBy(jlIvf).isEmpty)
   }
 }

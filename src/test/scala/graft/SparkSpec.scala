@@ -20,8 +20,10 @@ object SparkSpec {
   def session: SparkSession = synchronized {
     if (s == null || s.sparkContext.isStopped) {
       // the fork-free `file:` scheme Bench and Verify run on, so the
-      // checkpoint and state-store specs recover through it
+      // checkpoint and state-store specs recover through it, and their
+      // shared compiled classes (HarnessTuning)
       s = graft.io.LocalFs(SparkSession.builder())
+        .config("spark.sql.artifact.isolation.enabled", "false")
         .master("local[4]")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.sql.session.timeZone", "UTC")
