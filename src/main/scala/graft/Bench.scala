@@ -56,17 +56,13 @@ object Bench {
 
     // Floor tuning (AQE small-shuffle coalescing, compression off, scan
     // splits, shuffled-hash preference, serialized shuffle writer, tmpfs
-    // scratch) is shared with Verify via HarnessTuning — every knob is a
-    // harness-scale latency call documented there; a 100 TB cluster keeps
-    // the Spark defaults.
-    val spark = HarnessTuning.benchBuilder(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The bounded post-aggregate whole-frame windows (q09 top-100 rank,
-    // q17/q23 share-of-total, q46 renumber) each trip a per-partition
-    // WindowExec WARN; hundreds of them filled the r5 artifact's captured
-    // tail and drowned real signal. They are size-bounded by construction
-    // — drop that one logger to ERROR so genuine warnings survive.
-    Quiet.windowExecWarnings()
+    // scratch) is shared by every main via HarnessTuning — every knob is
+    // a harness-scale latency call documented there; a 100 TB cluster
+    // keeps the Spark defaults. The session also drops the WindowExec
+    // "No Partition Defined" WARN of the bounded whole-frame windows
+    // (q09 top-100 rank, q17/q23 share-of-total, q46 renumber), whose
+    // hundreds of lines filled the r5 artifact's captured tail.
+    val spark = HarnessTuning.session(cpus)
 
     // @volatile: the shutdown hook reads this from its own thread; a kill
     // mid-pass must not emit a stale errors map.

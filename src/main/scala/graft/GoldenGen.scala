@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Regenerates the checked-in golden outputs for the three queries the
@@ -12,8 +11,9 @@ import java.nio.file.{Files, Paths}
   *
   * Run ONLY when the semantics intentionally change:
   *   sbt "runMain graft.GoldenGen"
-  * (uses local[8] while GoldenSpec runs local[4] — a pass also certifies
-  * the outputs are parallelism-independent).
+  * (the Bench session at local[8] while GoldenSpec runs the test
+  * session's local[4] — a pass also certifies the outputs are
+  * parallelism-independent).
   */
 object GoldenGen {
   val goldenNames = Seq(
@@ -23,15 +23,7 @@ object GoldenGen {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 1) args(1) else "src/test/resources/golden"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessTuning.session("8")
     Files.createDirectories(Paths.get(outDir))
     for (name <- goldenNames) {
       val lines = SparkEntry.queries(name)(spark, sfDir).toJSON.collect().sorted

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
-/** Harness-scale floor tuning shared by Bench and Verify.
+/** Harness-scale floor tuning and the session factory every main uses.
   *
   * Everything here is a LATENCY knob for the local[32] / sub-MB-shuffle
   * harness — none of it changes results, and a 100 TB cluster deployment
@@ -110,34 +110,34 @@ object HarnessTuning {
       }
     }
 
-  /** The Bench session builder: `local[cpus]` with as many shuffle
+  /** The one session factory: `local[cpus]` with as many shuffle
     * partitions, AQE on, UTC, the graft extensions and this object's
-    * floor tuning. */
-  def benchBuilder(cpus: String): SparkSession.Builder =
-    apply(SparkSession.builder()
+    * floor tuning (the Bench session), plus the caller's own confs, at
+    * WARN with `Quiet`'s one logger dropped. Every main and the test
+    * session build through it, so a tool measures or checks the engine
+    * the bench times. */
+  def session(cpus: String, confs: (String, String)*): SparkSession = {
+    val bench = apply(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false"))
-
-  /** The one session of the dev mains (QBench, FlagAB, PlanDump): the
-    * Bench session at `SPARK_GRAFT_CPUS` threads (default 32, as Bench),
-    * plus ad-hoc overrides `SPARK_GRAFT_CONF="k=v;k=v"` — so a timing, an
-    * A/B and a plan dump all run under the parallelism the bench uses. */
-  def devSession(): SparkSession = {
-    val overrides = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
-      .split(";").filter(_.contains("=")).map { kv =>
-        val Array(k, v) = kv.split("=", 2); (k, v)
-      }
-    val b = benchBuilder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val spark = overrides.foldLeft(b)((b, kv) => b.config(kv._1, kv._2))
+    val spark = confs.foldLeft(bench) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     Quiet.windowExecWarnings()
     spark
   }
+
+  /** The dev mains' ad-hoc overrides (QBench, PlanDump):
+    * `SPARK_GRAFT_CONF="k=v;k=v"`. */
+  def envConfs(): Seq[(String, String)] =
+    sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(";").toSeq
+      .filter(_.contains("=")).map { kv =>
+        val Array(k, v) = kv.split("=", 2); (k, v)
+      }
 
   def apply(b: SparkSession.Builder): SparkSession.Builder = {
     val tuned = graft.io.LocalFs(b)

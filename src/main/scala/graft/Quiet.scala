@@ -1,6 +1,6 @@
 package graft
 
-/** Log-noise control for the artifact-producing mains (Bench/Verify).
+/** Log-noise control for every `HarnessTuning.session` (and perfbench's).
   *
   * The suite's bounded whole-frame windows (post-top-k rank, post-aggregate
   * share-of-total — a handful of rows by construction) each emit a

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Time-vs-scale-factor curves for the heavy query families (scratch
   * tooling, not library surface): runs each named query at sf0.01,
   * sf0.1 and the ScaleGen-synthesized sf1 (10× of sf0.1), reporting
@@ -9,6 +7,8 @@ import org.apache.spark.sql.SparkSession
   * are the evidence SCALE.md records: a banded/bucketed/superstep
   * family should grow roughly linearly in rows between sf0.1 and sf1;
   * anything super-linear gets a diagnosis.
+  *
+  * Runs on the Bench session (`HarnessTuning`) at 32 threads.
   *
   * Run ScaleGen first (builds /tmp/graft_sf1), then:
   *   sbt "runMain graft.ScaleCurve"                  # default set
@@ -52,7 +52,7 @@ object ScaleCurve {
     "q82_compaction")
 
   def main(args: Array[String]): Unit = {
-    val names = if (args.nonEmpty) args(0).split(",").toSeq else DefaultQueries
+    val names = if (args.nonEmpty) SparkEntry.names(args(0)) else DefaultQueries
     val sf1Dir = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val sfs = Seq(
       "sf0.01" -> "/root/testdata/sf0.01",
@@ -60,17 +60,7 @@ object ScaleCurve {
       "sf1" -> sf1Dir)
     require(new java.io.File(s"$sf1Dir/orders.parquet").exists(),
       s"run graft.ScaleGen first to build $sf1Dir")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Quiet.windowExecWarnings()
+    val spark = HarnessTuning.session("32")
 
     def noop(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()

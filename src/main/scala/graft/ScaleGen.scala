@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1 corpus synthesis for the scale rehearsal (scratch tooling, not
   * library surface) — a 10× corpus whose copies are DIVERGENT, unlike
-  * ScaleProbe's near-dup copies, so the heavy families' true-work
-  * density stays constant and a time-vs-sf curve reads as scaling
-  * evidence rather than candidate-density growth:
+  * the retired ScaleProbe's near-dup copies (OPTIMIZATION_r19.md), so
+  * the heavy families' true-work density stays constant and a
+  * time-vs-sf curve reads as scaling evidence rather than
+  * candidate-density growth:
   *
   *   - documents: every word of copy c>0 carries the copy suffix, so
   *     cross-copy shingle/minhash/bigram overlap is exactly ZERO —
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *     l_suppkey, so the purchase graph becomes 10 disjoint copies of
   *     the base graph — 10× nodes, 10× edges, unchanged degree
   *     distribution; PageRank supersteps and CC rounds do honestly 10×
-  *     the work (ScaleProbe's variant keeps the vertex set fixed and
+  *     the work (ScaleProbe's variant kept the vertex set fixed and
   *     the deduped edge list saturates).
   *   - events: event_id AND user_id remapped per copy (like the graph
   *     endpoints), so the user population grows 10× at constant
@@ -59,12 +59,8 @@ object ScaleGen {
     val out = if (args.length > 1) args(1) else "/tmp/graft_sf1"
     val zipf = args.length > 2 && args(2) == "zipf"
     val base = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessTuning.session("32",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     new java.io.File(out).mkdirs()
     def copies = spark.range(factor).select(col("id").as("copy"))
 

@@ -20,6 +20,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Polls.q23PollStandings(T(spark, "/root/testdata/sf0.001"))
 
+  /** The query names a tool's argument selects: a comma list in its own
+    * order, or `all` for every registered query, sorted. An unregistered
+    * name throws here, before the caller builds a session. */
+  def names(arg: String): Seq[String] = {
+    val registered = queries.keySet
+    if (arg == "all") registered.toSeq.sorted
+    else {
+      val names = arg.split(",").toSeq
+      val unknown = names.filterNot(registered)
+      require(unknown.isEmpty, s"unknown query name: ${unknown.mkString(", ")}")
+      names
+    }
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_pricing_summary" -> ((s, d) => Relational.q01PricingSummary(T(s, d))),
     "q02_weighted_avg"    -> ((s, d) => Relational.q02WeightedAvg(T(s, d))),
@@ -5931,8 +5945,8 @@ object SparkEntry {
     "q168_planted_jl_ivf_pq" -> q161OracleSql(planted = true),
     // q169: q166's oracle + the exact-rerank CTEs (the ADC
     // k_factor×topk shortlist re-scored by exact L2 from dims — the
-    // declared knee of the RerankSweep curve, in lockstep with
-    // Similarity.RerankKFactor)
+    // declared knee of the retired RerankSweep's curve, in lockstep
+    // with Similarity.RerankKFactor)
     "q169_planted_rerank" -> q162OracleSql(planted = true,
       rerank = Similarity.RerankKFactor * Similarity.RerankTopK),
     // q163: signup-day cohorts x purchase-day offsets, dense grid with

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -16,11 +15,11 @@ import scala.concurrent.duration.Duration
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // Optional dev-only filter: comma-separated query names (3rd arg).
+    // Optional dev-only filter: comma-separated query names or `all`
+    // (3rd arg); an unregistered name fails before the session starts.
     // The driver always invokes with exactly two args → full run.
     val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+      if (args.length > 2) Some(SparkEntry.names(args(2)).toSet) else None
     // SPARK_GRAFT_CODEGEN=off forces the INTERPRETED paths everywhere —
     // whole-stage codegen off and the expression factory pinned to
     // NO_CODEGEN, so every native Expression's eval() (not doGenCode)
@@ -36,23 +35,15 @@ object Verify {
     // a single value; the sweep proves the suite carries no hidden
     // dependence on either dialect.
     val ansi = !sys.env.get("SPARK_GRAFT_ANSI").contains("off")
-    // same harness-floor tuning as Bench (HarnessTuning) — the gate then
+    // the Bench session (HarnessTuning) at 8 threads — the gate then
     // verifies the exact plans the bench times, shuffled-hash joins and
     // serialized shuffle writer included
-    val spark = HarnessTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.wholeStage", (!interp).toString)
-      .config("spark.sql.codegen.factoryMode",
-        if (interp) "NO_CODEGEN" else "FALLBACK")
-      .config("spark.sql.ansi.enabled", ansi.toString)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Quiet.windowExecWarnings()
+    val spark = HarnessTuning.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"),
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.codegen.wholeStage" -> (!interp).toString,
+      "spark.sql.codegen.factoryMode" -> (if (interp) "NO_CODEGEN" else "FALLBACK"),
+      "spark.sql.ansi.enabled" -> ansi.toString)
     new java.io.File(outDir).mkdirs()
     val pool = Executors.newFixedThreadPool(4)
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)

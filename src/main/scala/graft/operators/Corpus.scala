@@ -1078,8 +1078,9 @@ object Corpus {
     * 100 TB shape: the store is model state (vocabulary-sized by
     * q120's 10^4× word-collapse argument); the batch pass is
     * partially-aggregated scan work; encode cost tracks the BATCH, not
-    * the corpus the model was trained on — TokStoreProbe measures the
-    * split (SCALE.md). */
+    * the corpus the model was trained on — the retired TokStoreProbe
+    * measured the split (SCALE.md; OPTIMIZATION_r19.md "Retired flags
+    * and probes"). */
   def bpeEncodeAgainstStore(merges: Seq[(Int, String, String, String, Long)],
                             dict: DataFrame, batch: DataFrame): DataFrame = {
     // per-document histogram, not the occurrence explode (the bpeVocab0

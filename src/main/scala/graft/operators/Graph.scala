@@ -266,8 +266,9 @@ object Graph {
     * its documented bound, convergence-checked pointer-jump above it),
     * and (5) a broadcast relabel of the delta-sized mapping over the
     * stored labels. Nothing in (1)–(5) scans the base corpus:
-    * CcAddProbe measures the apply leg flat while the store build
-    * grows with the corpus. Output pins each entity's new label NEXT
+    * the retired CcAddProbe measured the apply leg flat while the
+    * store build grows with the corpus (SCALE.md; OPTIMIZATION_r19.md
+    * "Retired flags and probes"). Output pins each entity's new label NEXT
     * TO its stored base label (-1 when the node is new today) — the
     * q156 drift device — plus rebuilt component sizes. */
   def q159IncrementalCc(t: graft.Tables.T): DataFrame = {

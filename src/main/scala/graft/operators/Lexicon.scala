@@ -514,9 +514,10 @@ object Lexicon {
     * stored merges to their character sequence (standard BPE serving);
     * '|'/'\' words are counted, not dropped. Output: the per-(lang,
     * source) accounting with the OOV and skipped columns a serving
-    * fleet monitors. TokStoreProbe measures the seam this declares:
-    * encode wall tracks the batch while the retrain leg grows with
-    * the vocabulary (SCALE.md). */
+    * fleet monitors. The retired TokStoreProbe measured the seam this
+    * declares: encode wall tracks the batch while the retrain leg
+    * grows with the vocabulary (SCALE.md; OPTIMIZATION_r19.md "Retired
+    * flags and probes"). */
   def q183LexBpeEncodeStore(t: T): DataFrame =
     Corpus.bpeEncodeFromStore(multiLexBase(t.documents),
       multiLexDelta(t.documents), 8)

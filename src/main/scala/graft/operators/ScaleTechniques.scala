@@ -49,8 +49,9 @@ object ScaleTechniques {
     * knobs ride here, e.g. `parquet.bloom.filter.enabled#<col>` for a
     * bloom on the hot lookup key and `parquet.block.size` to size row
     * groups so the sort's min/max stats prune at sub-file granularity
-    * (IoPruneProbe measures both against the flat layout; SCALE.md
-    * I/O section has the cells). */
+    * (the retired IoPruneProbe measured both against the flat layout:
+    * SCALE.md I/O section has the cells, OPTIMIZATION_r19.md "Retired
+    * flags and probes" the probe). */
   def writePartitionedSorted(df: DataFrame, path: String,
                              partCol: String, sortCols: Seq[String],
                              options: Map[String, String] = Map.empty): Unit =

@@ -98,8 +98,9 @@ object Sessions {
     *
     * Value-identical to [[sessionize]] by construction (within-bucket
     * splits have gap > threshold, so stitching can only re-join true
-    * sessions; SessionsSpec pins crafted boundary logs and SkewProbe
-    * asserts frame equality on the zipf corpus). The value total sums
+    * sessions; SessionsSpec pins crafted boundary logs, and the
+    * retired SkewProbe asserted frame equality on the zipf corpus:
+    * OPTIMIZATION_r19.md "Retired flags and probes"). The value total sums
     * in EXACT INTEGER CENTS inside the partials (values are 2-dp by
     * construction) and divides once at the end — long addition
     * associates, so the two-level partial-then-stitch sum carries no

@@ -495,7 +495,8 @@ object Similarity {
     // ONE select, not k chained withColumns (r18 optimization round):
     // every withColumn re-analyzes the whole accumulated plan, and with
     // k literal-heavy vec_dot trees the analyzer passes — not the
-    // executors — were the per-round training wall (TrainJobProbe:
+    // executors — were the per-round training wall (the retired
+    // TrainJobProbe, OPTIMIZATION_r19.md "Retired flags and probes":
     // ~0.4 s driver gap per fused round). Identical expressions,
     // identical column order, one analysis pass.
     val dists = (1 to k).map { j =>
@@ -666,8 +667,9 @@ object Similarity {
     * (the q147 exact-integer device, so the oracle pins list membership,
     * not just counts). 100 TB shape: the add job's cost tracks the
     * BATCH — k·d literal distances per new vector plus a k-sized delta
-    * aggregate (IvfAddProbe measures the add leg flat at 20× corpus
-    * while rebuild grows with it); drift eventually forces a retrain,
+    * aggregate (the retired IvfAddProbe measured the add leg flat at
+    * 20× corpus while rebuild grows with it: SCALE.md,
+    * OPTIMIZATION_r19.md "Retired flags and probes"); drift eventually forces a retrain,
     * which is q143 again.
     *
     * Reference instinct: incremental `since` ingestion against a
@@ -1564,8 +1566,9 @@ object Similarity {
     jlIvfPq(plantedEmbeddings(t.embeddings), 16, 10, 3, 2, 4, 8, 2, 5)
 
   /** FAISS `k_factor` for the exact-refinement stage: the served
-    * shortlist is k_factor × topk ADC candidates. The rule (RerankSweep,
-    * measured): 12-bit codes cannot rank within the ambiguity set they
+    * shortlist is k_factor × topk ADC candidates. The rule (measured
+    * by the retired RerankSweep, OPTIMIZATION_r19.md "Retired flags
+    * and probes"): 12-bit codes cannot rank within the ambiguity set they
     * collapse, so the shortlist must scale with the probed lists'
     * code-tie mass, not with topk alone — at shortlist = topk (the
     * no-refinement point) sf0.1 recall is 11/50, at 4×topk 27/50, at

@@ -52,14 +52,9 @@ class CodegenReuseSpec extends SparkSpec {
   }
 
   test("the Bench builder and the test session turn artifact isolation off") {
+    // the test session is HarnessTuning's Bench session (SparkSpec)
     val key = "spark.sql.artifact.isolation.enabled"
     assert(spark.conf.get(key) == "false", "test session")
-    // SparkSpec.session rebuilds the shared session on next access
-    spark.stop()
-    val bench = HarnessTuning.benchBuilder("2").getOrCreate()
-    try {
-      assert(bench.conf.get(key) == "false", "Bench builder")
-      assert(bench.newSession().conf.get(key) == "false", "Bench child session")
-    } finally bench.stop()
+    assert(spark.newSession().conf.get(key) == "false", "child session")
   }
 }

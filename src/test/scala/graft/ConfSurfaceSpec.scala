@@ -12,19 +12,26 @@ import scala.jdk.CollectionConverters._
   * comment) and is not one of them fails here — a new flag, or a doc
   * reference to a retired one.
   *
+  * Sessions: `HarnessTuning` is the one session factory, so no other
+  * file under src/main calls `SparkSession.builder`, and every
+  * `runMain graft.<X>` the runbooks name is a main that exists.
+  *
   * Training scopes (Corpus/Similarity `withStaticPlan`, Corpus
   * `withModelReduce`) turn AQE off and shrink the reduce fan-in while a
   * trainer runs; both session confs must come back whatever the trainer
   * throws. */
 class ConfSurfaceSpec extends SparkSpec {
 
+  private val sources: Seq[Path] = Files.walk(Paths.get("src/main/scala"))
+    .iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
+
+  private def read(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
+
   test("the only spark.graft.* keys are the two optimizer kill switches") {
-    val sources: Seq[Path] = Files.walk(Paths.get("src/main/scala")).iterator()
-      .asScala.filter(_.toString.endsWith(".scala")).toSeq
     assert(sources.nonEmpty)
     val key = """spark\.graft\.[A-Za-z.]*[A-Za-z]""".r
     val found = sources.flatMap { p =>
-      key.findAllIn(new String(Files.readAllBytes(p), "UTF-8"))
+      key.findAllIn(read(p))
         .map(k => k -> p.getFileName.toString)
     }
     val declared = Set(graft.plans.SimilarityJoinRewrite.EnabledKey,
@@ -35,6 +42,29 @@ class ConfSurfaceSpec extends SparkSpec {
     assert(extra.isEmpty, "undeclared spark.graft keys: " +
       extra.distinct.map { case (k, f) => s"$k ($f)" }.mkString(", "))
     assert(found.map(_._1).toSet == declared)
+  }
+
+  test("SparkSession.builder appears under src/main only in " +
+    "HarnessTuning.scala") {
+    val builders = sources.filter(p => read(p).contains("SparkSession.builder"))
+      .map(_.getFileName.toString)
+    assert(builders == Seq("HarnessTuning.scala"))
+  }
+
+  test("every runMain graft.<X> in the runbooks names a main under " +
+    "src/main") {
+    val mains = sources.map(read).filter(_.contains("def main(")).flatMap(
+      """(?m)^object (\w+)""".r.findAllMatchIn(_).map(_.group(1))).toSet
+    assert(mains.contains("Verify") && mains.contains("Bench"))
+    val named = Seq(".claude/skills/verify/SKILL.md", "README.md", "SCALE.md")
+      .flatMap { doc =>
+        """runMain graft\.(\w+)""".r.findAllMatchIn(read(Paths.get(doc)))
+          .map(m => m.group(1) -> doc)
+      }
+    assert(named.nonEmpty)
+    val missing = named.filterNot(n => mains(n._1)).distinct
+    assert(missing.isEmpty, "runMain of no main: " +
+      missing.map { case (m, d) => s"$m ($d)" }.mkString(", "))
   }
 
   test("training scopes restore AQE and shuffle partitions when the " +

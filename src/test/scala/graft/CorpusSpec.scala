@@ -2,7 +2,10 @@ package graft
 
 import graft.operators.Corpus
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Corpus-construction operators: the q77 two-phase packing core against
   * the naive one-task window it replaces, and the packing arithmetic on a
@@ -77,26 +80,59 @@ class CorpusSpec extends SparkSpec {
     assert(out.toSeq == Seq(0L, 0L, 9L)) // de restarts at 0
   }
 
+  /** The physical plans (the initial one and every AQE re-plan) of the
+    * SQL executions `body` runs, including those a `localCheckpoint`
+    * runs inside: q76 checkpoints after its LM join, so the returned
+    * frame's own plan is a scan of the checkpoint and shows no join. */
+  private def sqlPlans[A](body: => A): (A, String) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          plans.add(u.physicalPlanDescription)
+        case _ => ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.ListenerDrain(sc)
+      (a, plans.asScala.mkString("\n"))
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("q76 LM join degrades to a shuffle join when broadcast cannot fit (r9 watch)") {
     // The LM side carries no forced broadcast() hint; AQE measures the
     // actual bytes and picks. Shrinking both broadcast thresholds to -1
     // models an adversarial web-scale vocabulary: the plan must fall back
     // to a shuffled join — never a driver-side OOM — with identical rows.
     val sf = "/root/testdata/sf0.001"
-    val baseline = graft.operators.Corpus.q76RarityScore(graft.Tables.T(spark, sf))
-    val baseRows = baseline.collect().toSeq
+    def q76() = graft.operators.Corpus.q76RarityScore(graft.Tables.T(spark, sf))
+    val (baseRows, basePlans) = sqlPlans(q76().collect().toSeq)
     assert(baseRows.nonEmpty)
+    assert(basePlans.contains("BroadcastHashJoin"),
+      "an sf0.001 LM fits, so AQE must broadcast it")
     val prevStatic = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevAqe = spark.conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      val df = graft.operators.Corpus.q76RarityScore(graft.Tables.T(spark, sf))
-      val rows = df.collect().toSeq
-      val finalPlan = df.queryExecution.executedPlan.toString
-      assert(!finalPlan.contains("BroadcastHashJoin"),
+      val (rows, plans) = sqlPlans(q76().collect().toSeq)
+      assert(plans.contains("SortMergeJoin") || plans.contains("ShuffledHashJoin"),
+        "the LM join must run as a shuffle join")
+      assert(!plans.contains("BroadcastHashJoin"),
         "LM join must not broadcast when the threshold forbids it")
       assert(rows == baseRows, "fallback join changed the result")
+      // on Spark's defaults (a cluster's confs) the fallback is sort-merge
+      withSparkDefaults {
+        val (smjRows, smjPlans) = sqlPlans(q76().collect().toSeq)
+        assert(smjPlans.contains("SortMergeJoin") &&
+          !smjPlans.contains("BroadcastHashJoin"),
+          "default confs must plan the LM join as a sort-merge join")
+        assert(smjRows == baseRows, "sort-merge fallback changed the result")
+      }
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevStatic)
       prevAqe match {

@@ -43,4 +43,15 @@ class DocCoverageSpec extends AnyFunSuite {
     assert(missing.isEmpty,
       s"queries without oracle SQL: ${missing.toSeq.sorted.mkString(", ")}")
   }
+
+  test("SparkEntry.names keeps a list's order, sorts all, and rejects " +
+    "an unregistered name") {
+    assert(SparkEntry.names("q23_poll_standings,q01_pricing_summary") ==
+      Seq("q23_poll_standings", "q01_pricing_summary"))
+    assert(SparkEntry.names("all") == SparkEntry.queries.keys.toSeq.sorted)
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.names("q01_pricing_summary,q999_typo"))
+    assert(e.getMessage.contains("q999_typo"))
+    assert(!e.getMessage.contains("q01_pricing_summary"))
+  }
 }

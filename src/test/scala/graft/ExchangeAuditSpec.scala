@@ -6,7 +6,8 @@ package graft
   * (the r13 q139 lesson: AQE re-exchanged both checkpointed sides on
   * every superstep until the plan was pinned). These pins assert the
   * final ADAPTIVE plan's exchange count (post-execution, ReusedExchange
-  * excluded — ExplainAudit's counting discipline) at sf0.001, so any
+  * excluded — the retired ExplainAudit's counting discipline,
+  * OPTIMIZATION_r19.md "Retired flags and probes") at sf0.001, so any
   * future edit that re-introduces a re-exchange fails here by count.
   *
   * The pinned numbers are the ADJUDICATED shapes, not aspirations —

@@ -15,12 +15,11 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.{FsCreateModes, FsPermission}
 import org.apache.hadoop.util.ReflectionUtils
-import org.apache.spark.sql.SparkSession
 
 /** The fork-free `file:` scheme (`graft.io.LocalFs`): it answers like
   * Hadoop's stock local filesystem, a streaming query over it spawns no
-  * `chmod`/`readlink`/`ls`/`stat` process, and both the Bench builder and
-  * the test session resolve both Hadoop entry points to it. */
+  * `chmod`/`readlink`/`ls`/`stat` process, and the test session (the
+  * Bench builder's session) resolves both Hadoop entry points to it. */
 class LocalFsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -144,22 +143,14 @@ class LocalFsSpec extends SparkSpec {
 
   test("the Bench builder and the test session resolve file: to the " +
     "fork-free classes") {
-    def check(s: SparkSession, name: String): Unit = {
-      val conf = s.sparkContext.hadoopConfiguration
-      val root = URI.create("file:///")
-      assert(FileSystem.get(root, conf).getClass == classOf[NioLocalFileSystem], name)
-      val fresh = FileSystem.newInstance(root, conf)
-      try assert(fresh.getClass == classOf[NioLocalFileSystem], name)
-      finally fresh.close()
-      assert(FileContext.getFileContext(root, conf).getDefaultFileSystem
-        .getClass == classOf[NioLocalFs], name)
-    }
-    check(spark, "test session")
-    // the Bench builder needs a session of its own; SparkSpec.session
-    // rebuilds the shared one on next access (SessionCacheSpec relies on
-    // the same)
-    spark.stop()
-    val bench = HarnessTuning.benchBuilder("2").getOrCreate()
-    try check(bench, "Bench builder") finally bench.stop()
+    // the test session is HarnessTuning's Bench session (SparkSpec)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = URI.create("file:///")
+    assert(FileSystem.get(root, conf).getClass == classOf[NioLocalFileSystem])
+    val fresh = FileSystem.newInstance(root, conf)
+    try assert(fresh.getClass == classOf[NioLocalFileSystem])
+    finally fresh.close()
+    assert(FileContext.getFileContext(root, conf).getDefaultFileSystem
+      .getClass == classOf[NioLocalFs])
   }
 }

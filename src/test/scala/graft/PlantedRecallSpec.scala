@@ -106,7 +106,8 @@ class PlantedRecallSpec extends SparkSpec {
     "sf0.1 corpus") {
     // q169's EXACT pipeline and parameters on the 2000-id planted
     // corpus (the sf0.1 id set — these are the driver-gate numbers):
-    // the RerankSweep knee (shortlist = k_factor × topk = 50) must
+    // the knee the retired RerankSweep measured (OPTIMIZATION_r19.md
+    // "Retired flags and probes"; shortlist = k_factor × topk = 50) must
     // recover ≥ 35/50 where the unrefined ADC top-5 reads 11/50. A
     // k_factor retune that silently degrades the serving recall fails
     // here, not in a probe nobody re-runs. (At 5000 ids the same

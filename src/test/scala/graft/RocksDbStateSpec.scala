@@ -67,6 +67,8 @@ class RocksDbStateSpec extends SparkSpec {
 
   test("RocksDB changelog checkpointing: two-leg continuation matches " +
     "batch (the commit format StreamStateProbe measures 5-6x faster)") {
+    // StreamStateProbe is retired; its cells are in SCALE.md and its
+    // row in OPTIMIZATION_r19.md "Retired flags and probes"
     // the checkpoint FORMAT is what changes under changelog mode, so
     // the discriminating rehearsal is a RESTART: leg B must restore
     // leg A's state from the delta log + last snapshot, not from a
