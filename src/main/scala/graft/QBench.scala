@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.GraftSqlShim
+
 /** Dev harness: time a subset of SparkEntry.queries on the Bench session
   * (`SPARK_GRAFT_CPUS` threads, default 32, plus `SPARK_GRAFT_CONF="k=v;k=v"`
   * overrides). Not part of the driver contract — Bench.scala is the
@@ -9,8 +11,9 @@ package graft
   *
   * The first argument is a comma list or `all`. Every query runs once to
   * warm (staging, codegen, page cache), then each rep prints construct /
-  * exec seconds and the rep's Janino compiles (a compile in a warm rep is
-  * a class the JVM's cache missed), then min/median/max per query.
+  * exec seconds, the rep's Spark jobs (construct plus exec) and its Janino
+  * compiles (a compile in a warm rep is a class the JVM's cache missed),
+  * then min/median/max per query.
   *
   * With `key=vA,vB` each rep runs each query in the palindromic order
   * A,B,B,A with the session conf `key` set to each value, both variants
@@ -33,6 +36,12 @@ object QBench {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
       HarnessTuning.envConfs(): _*)
     def label(v: String) = key.fold("")(k => s" $k=$v")
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val sc = spark.sparkContext
+    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    })
     def run(n: String, v: String): (Double, Double) = {
       key.foreach(spark.conf.set(_, v))
       val t0 = System.nanoTime()
@@ -48,10 +57,11 @@ object QBench {
     def compiles() = org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
     for (r <- 1 to reps; n <- names; v <- order) {
-      val c0 = compiles()
+      val (c0, j0) = (compiles(), jobs.get)
       val (construct, exec) = run(n, v)
       samples((n, v)) = samples((n, v)) :+ (construct + exec)
-      println(f"[qbench] $n${label(v)} rep$r construct $construct%.3f exec $exec%.3f compiles ${compiles() - c0}")
+      GraftSqlShim.drainListeners(sc) // every job start of the rep counted
+      println(f"[qbench] $n${label(v)} rep$r construct $construct%.3f exec $exec%.3f jobs ${jobs.get - j0} compiles ${compiles() - c0}")
     }
     for (n <- names; v <- variants) {
       val s = samples((n, v)).sorted
