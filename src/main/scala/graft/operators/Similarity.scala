@@ -23,8 +23,8 @@ import graft.Serve._
   * partition survive the window). For a large query side, swap the window
   * for per-partition local top-k + merge, or the LSH variant below, whose
   * candidate set per query is the bucket, not the corpus (recall traded for
-  * a ~2^nbits candidate reduction; IVF with learned centroids is the
-  * production upgrade and slots into the same shape — bucket id = nearest
+  * a ~2^nbits candidate reduction; IVF with learned centroids, q143 and
+  * the pipelines after it, is the same shape with bucket id = nearest
   * centroid id).
   */
 object Similarity {
@@ -337,10 +337,10 @@ object Similarity {
   def q142Kmeans(t: T): DataFrame =
     kmeansFixedPoint(t.embeddings, 10, 3)
 
-  /** Lloyd core shared by q142 (report) and q143 (IVF index build):
-    * quantized corpus frame, the final centroid array (dense, position
-    * (j−1)·D + d), D, and the literal-centroid distance/argmin column
-    * builders. */
+  /** A trained Lloyd model, shared by q142 (report) and the IVF index
+    * builds (q143/q147/q150): the quantized corpus frame, the final
+    * centroids and the ones the final E-step assigned against (dense,
+    * position (j−1)·D + d), D and k. */
   private[graft] final case class LloydState(
       qframe: DataFrame, // (vec_id, label, qd: array<double>, qq: double)
       ca: Array[Long],   // final centroids, dense (j-1)*D + d
@@ -362,7 +362,7 @@ object Similarity {
     // quantized corpus, ONE narrow materialization — it never changes
     // across rounds
     val qframe = quantized(embeddings).localCheckpoint(false)
-    val (ca, caIn, d) = lloydCore(qframe, k, iterations, seedTag = 143)
+    val (ca, caIn, d) = train(qframe, k, iterations, seedTag = 143)
     LloydState(qframe, ca, caIn, d, k)
   }
 
@@ -496,6 +496,183 @@ object Similarity {
       expr(s"CAST($ls AS BIGINT)").as("dist")): _*)
   }
 
+  /** lloydCore, total: on an empty frame lloydCore's seed collect comes
+    * back empty and `seeds.head` throws NoSuchElementException (a failed
+    * job surfaces as a SparkException instead); the model is then empty
+    * (d = 0), and every serving leg over it plans and returns no rows. */
+  private def train(frame: DataFrame, k: Int, iterations: Int,
+                    seedTag: Int): (Array[Long], Array[Long], Int) =
+    try lloydCore(frame, k, iterations, seedTag)
+    catch { case _: NoSuchElementException =>
+      (Array.emptyLongArray, Array.emptyLongArray, 0) }
+
+  // ---- the ANN search-and-audit kernel (q143–q169) ----
+  // Every frame a serving action reads is checkpointed EAGERLY: a lazy
+  // localCheckpoint first computed inside the AQE action truncates its
+  // lineage while a concurrent query-stage job's DAG walk reads it (NPE
+  // "RDD.dependencies() is null"; ServingCheckpointSpec).
+
+  /** Columns name{from}..name{from+n−1}: code0.., dt0.., probe1... */
+  private def numbered(name: String, n: Int, from: Int = 0): Seq[Column] =
+    (from until from + n).map(i => col(s"$name$i"))
+
+  /** The coarse IVF index of a (vec_id, qd, qq) frame: (vec_id, cluster,
+    * qd, qq, `extra`), each row in the list of its nearest centroid of
+    * `ca` (assignCols' map-side argmin). */
+  private def coarseIndex(frame: DataFrame, ca: Array[Long], d: Int, k: Int,
+                          extra: Column*): DataFrame =
+    assignCols(frame, ca, d, k)
+      .select(Seq(col("vec_id"), col("cluster"), col("qd"), col("qq")) ++ extra: _*)
+
+  /** The query slice of a (vec_id, qd, qq) frame — the ten corpus vectors
+    * vec_id < 10 every ANN pipeline serves and audits: query_id, `cols`,
+    * then the query vector as (pqd, pqq). */
+  private def querySlice(frame: DataFrame, cols: Column*): DataFrame =
+    frame.filter(col("vec_id") < 10).select((col("vec_id").as("query_id") +: cols) ++
+      Seq(col("qd").as("pqd"), col("qq").as("pqq")): _*)
+
+  /** The query slice with each query's `nprobe` nearest centroids of `ca`
+    * as probe1..probe{nprobe} (FAISS `nprobe`): the k distance columns
+    * sorted in-row as (dist, cluster) structs — 10 rows, no shuffle. */
+  private def probeSlice(frame: DataFrame, ca: Array[Long], d: Int, k: Int,
+                         nprobe: Int): DataFrame =
+    querySlice(coarseDistCols(frame, ca, d, k).withColumn("ps", expr(
+      "array_sort(array(" + (1 to k).map(j => s"struct(s$j AS d, $j AS c)")
+        .mkString(", ") + "))")),
+      (0 until nprobe).map(i => expr(s"ps[$i].c").as(s"probe${i + 1}")): _*)
+
+  /** A probe slice's rows exploded to one per probed list (`cluster`). */
+  private def probedLists(nprobe: Int): Column =
+    explode(array(numbered("probe", nprobe, 1): _*)).as("cluster")
+
+  /** The inverted-list candidate join: the broadcast probe rows (one per
+    * query and probed `cluster`) against the index lists, the query
+    * itself excluded — candidates per query are the probed lists, never
+    * the corpus. */
+  private def listJoin(index: DataFrame, probes: DataFrame): DataFrame =
+    index.join(broadcast(probes), Seq("cluster"))
+      .filter(col("vec_id") =!= col("query_id"))
+
+  /** A ranking score of a candidate (qd, qq) against its query (pqd,
+    * pqq): the column `name`, best first in the given direction. */
+  private final case class Score(name: String, value: Column, descending: Boolean)
+
+  /** Cosine over quantized vectors, rounded to 6 places: the dot and both
+    * norm² terms are exact integers < 2^53, so only the final sqrt and
+    * divide are FP, on identical operand bits in both engines. */
+  private val Cosine = Score("cosine", round(
+    expr("vec_dot(qd, pqd)") / (sqrt(col("qq")) * sqrt(col("pqq"))), 6), descending = true)
+
+  /** Exact squared L2: integer arithmetic end to end. */
+  private val L2 = Score("l2",
+    expr("CAST(qq + pqq - 2 * vec_dot(qd, pqd) AS BIGINT)"), descending = false)
+
+  /** ADC over m codes: the candidate's sub-codes looked up in the query's
+    * distance tables dt0..dt{m−1} and summed (exact integers). */
+  private def adc(m: Int) = Score("adc", expr("CAST(" + (0 until m)
+    .map(s => s"element_at(dt$s, code$s)").mkString(" + ") + " AS BIGINT)"),
+    descending = false)
+
+  /** The top `k` rows per query by `s`, ties to the smaller vec_id: the
+    * rows with their score and their rank in column `rank`. */
+  private def topK(df: DataFrame, s: Score, k: Int, rank: String = "rk"): DataFrame =
+    df.withColumn(s.name, s.value)
+      .withColumn(rank, row_number().over(Window.partitionBy("query_id").orderBy(
+        if (s.descending) col(s.name).desc else col(s.name).asc, col("vec_id").asc)))
+      .filter(col(rank) <= k)
+
+  /** topK as a ranked leg of the recall audit: (query_id, vec_id). */
+  private def ranked(df: DataFrame, s: Score, k: Int): DataFrame =
+    topK(df, s, k).select("query_id", "vec_id")
+
+  /** The brute-truth leg: every (vec_id, qd, qq) row of `corpus` against
+    * every query (query_id, pqd, pqq) of the broadcast slice but itself,
+    * ranked to the top `k` — the bounded offline recall-evaluation job
+    * (PlanAuditSpec allowlists its nested-loop join). */
+  private def bruteTop(corpus: DataFrame, queries: DataFrame, s: Score,
+                       k: Int): DataFrame =
+    ranked(corpus.select("vec_id", "qd", "qq")
+      .join(broadcast(queries.select("query_id", "pqd", "pqq")),
+        col("vec_id") =!= col("query_id")), s, k)
+
+  /** A ranked leg of the recall audit: its top-k (query_id, vec_id), the
+    * name of its match count and, optionally, of its id-sum fingerprint. */
+  private[graft] final case class Leg(top: DataFrame, nMatch: String,
+                                      fp: Option[String] = None)
+
+  /** The recall audit, one row per query: the `keys` columns (query_id
+    * alone without keys), n_candidates over `cand` (when given), each
+    * leg's match count against the top-k `truth`, each leg's fingerprint,
+    * then truth_fp. Everything that feeds it is exact integer arithmetic
+    * (quantized scores and id sums), so the oracle replays it
+    * bit-for-bit. The candidate-derived counts join LEFT from the keys:
+    * a query whose probed list has no other member still emits
+    * n_candidates = 0 and n_match = 0 rather than vanish; the truth joins
+    * inner. Without keys the first leg's counts are the base. */
+  private[graft] def recallAudit(keys: Option[DataFrame], cand: Option[DataFrame],
+                                 legs: Seq[Leg], truth: DataFrame): DataFrame = {
+    val nCand = cand.map(_.groupBy("query_id").agg(count(lit(1)).as("n_candidates")))
+    val matches = legs.map(l =>
+      l.top.join(truth.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
+        .groupBy("query_id")
+        .agg(sum("hit").as(l.nMatch), l.fp.map(sum("vec_id").as(_)).toSeq: _*))
+    val tf = truth.groupBy("query_id").agg(sum("vec_id").as("truth_fp"))
+    val parts = keys.toSeq ++ nCand ++ matches
+    val counts = nCand.map(_ => "n_candidates").toSeq ++ legs.map(_.nMatch)
+    parts.tail.foldLeft(parts.head)(_.join(_, Seq("query_id"), "left"))
+      .join(tf, Seq("query_id"))
+      .select(keys.fold(Seq(col("query_id")))(_.columns.toSeq.map(col)) ++
+        counts.map(c => coalesce(col(c), lit(0L)).as(c)) ++
+        legs.flatMap(_.fp).map(col) :+ col("truth_fp"): _*)
+      .smallSort("query_id")
+  }
+
+  /** The encoded PQ index (vec_id, cluster, code0..code{m−1}) over the
+    * `src` slices — the frame a store persists. */
+  private def pqIndex(frame: DataFrame, codebooks: Seq[Array[Long]], sub: Int,
+                      ksub: Int, src: String): DataFrame =
+    pqEncode(frame, codebooks, sub, ksub, src)
+      .select(col("vec_id") +: col("cluster") +: numbered("code", codebooks.size): _*)
+      .localCheckpoint()
+
+  /** nprobe = 1 IVF-PQ serving with its recall audit (q157/q160 and their
+    * planted twins): each query searches its own list by ADC over its
+    * `queries` tables, audited against the exact squared-L2 truth over
+    * `corpus` (the bounded offline recall job). */
+  private def servePq(index: DataFrame, queries: DataFrame, corpus: DataFrame,
+                      m: Int, topk: Int): DataFrame = {
+    val cand = listJoin(index,
+      queries.select(col("query_id") +: col("cluster") +: numbered("dt", m): _*))
+    recallAudit(Some(queries.select(col("query_id"), col("cluster").as("probe"))),
+      Some(cand), Seq(Leg(ranked(cand, adc(m), topk), "n_match", Some("adc_fp"))),
+      bruteTop(corpus, queries, L2, topk))
+  }
+
+  /** The residual IVF-PQ model and index q160 and q162 share. */
+  private final case class ResidualIndex(qframe: DataFrame, ca: Array[Long],
+      d: Int, sub: Int, rframe: DataFrame, codebooks: Seq[Array[Long]],
+      index: DataFrame)
+
+  /** Residual training NEEDS the final coarse model (seed tag 143 —
+    * lloyd()'s) before codebooks can see a residual, so coarse trains
+    * first; the subspace trainings (tag base 16000) still fuse with each
+    * other. `rframe` is the stored coarse index plus the residual
+    * rd = qd − centroid(cluster) in ONE checkpoint (the truth leg reads
+    * qd/qq from it too); `index` encodes the residual slices. */
+  private def residualIndex(embeddings: DataFrame, kCoarse: Int,
+      coarseIters: Int, m: Int, ksub: Int, subIters: Int): ResidualIndex = {
+    val qframe = quantized(embeddings).localCheckpoint(false)
+    val (ca, _, d) = train(qframe, kCoarse, coarseIters, seedTag = 143)
+    val sub = d / m
+    require(sub * m == d, s"d=$d must split into $m subspaces")
+    val rframe = coarseIndex(qframe, ca, d, kCoarse,
+      residualCol(ca, kCoarse, d).as("rd")).localCheckpoint(false)
+    val codebooks = pqTrainFused(rframe.select(col("vec_id"), col("rd").as("qd")),
+      m, sub, ksub, subIters, tagBase = 16000)
+    ResidualIndex(qframe, ca, d, sub, rframe, codebooks,
+      pqIndex(rframe, codebooks, sub, ksub, "rd"))
+  }
+
   /** q143 — IVF ANN over LEARNED centroids (the production upgrade q58's
     * scaladoc names): the coarse quantizer is q142's k-means model — not
     * the table's label column — so this is the index build a 100 TB
@@ -524,21 +701,8 @@ object Similarity {
     // (CollapseProject has no cross-operator subexpression sharing —
     // measured 11 s of re-evaluated expression trees on 2000 rows); the
     // materialized frame IS the IVF index a store persists anyway
-    val assigned = assignCols(st.qframe, st.ca, st.d, st.k)
-      .select(col("vec_id"), col("cluster"), col("qd"), col("qq"))
-      .localCheckpoint(false)
-    val queries = assigned.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("cluster"),
-        col("qd").as("pqd"), col("qq").as("pqq"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    assigned
-      .join(broadcast(queries), Seq("cluster")) // inverted-list equi-join
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", round(
-        expr("vec_dot(qd, pqd)") / (sqrt(col("qq")) * sqrt(col("pqq"))), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 3)
+    val assigned = coarseIndex(st.qframe, st.ca, st.d, st.k).localCheckpoint()
+    topK(listJoin(assigned, querySlice(assigned, col("cluster"))), Cosine, 3, "rank")
       .select("query_id", "cluster", "rank", "vec_id", "cosine")
       .smallSort("query_id", "rank")
   }
@@ -568,61 +732,13 @@ object Similarity {
   def ivfMultiprobe(embeddings: DataFrame, k: Int,
                     iterations: Int): DataFrame = {
     val st = lloyd(embeddings, k, iterations)
-    val assigned = assignCols(st.qframe, st.ca, st.d, st.k)
-      .select(col("vec_id"), col("cluster"), col("qd"), col("qq"))
-      .localCheckpoint(false)
-    // per-query two nearest centroids: the k distance columns again,
-    // sorted in-row as (dist, cluster) structs — 10 rows, no shuffle
-    val withDists = coarseDistCols(st.qframe.filter(col("vec_id") < 10), st.ca, st.d, st.k)
-    val probes = withDists
-      .withColumn("ps", expr("array_sort(array(" + (1 to st.k)
-        .map(j => s"struct(s$j AS d, $j AS c)").mkString(", ") + "))"))
-      .select(col("vec_id").as("query_id"), col("qd").as("pqd"),
-        col("qq").as("pqq"),
-        expr("ps[0].c").as("probe1"), expr("ps[1].c").as("probe2"))
-      .localCheckpoint(false)
-    val cosine = round(
-      expr("vec_dot(qd, pqd)") / (sqrt(col("qq")) * sqrt(col("pqq"))), 6)
-    // searched leg: union of the two probed lists via a 20-row explode →
-    // cluster equi-join; top-5 by quantized cosine
-    val cand = assigned
-      .join(broadcast(probes
-        .select(col("query_id"), col("pqd"), col("pqq"),
-          explode(array(col("probe1"), col("probe2"))).as("cluster"))),
-        Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-    val nCand = cand.groupBy("query_id")
-      .agg(count(lit(1)).as("n_candidates"))
-    val wS = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    val searched = cand.withColumn("cosine", cosine)
-      .withColumn("rank", row_number().over(wS))
-      .filter(col("rank") <= 5)
-      .select("query_id", "vec_id", "cosine")
-    // truth leg: brute force over the whole corpus (the q25 shape — the
-    // offline recall-evaluation job), same score and tie-break
-    val truth = assigned.select("vec_id", "qd", "qq")
-      .join(broadcast(probes.select("query_id", "pqd", "pqq")),
-        col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", cosine)
-      .withColumn("rank", row_number().over(wS))
-      .filter(col("rank") <= 5)
-      .select("query_id", "vec_id")
-    val recall = searched
-      .join(truth.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(sum("hit").as("n_match"), sum("vec_id").as("found_fp"))
-    val truthFp = truth.groupBy("query_id")
-      .agg(sum("vec_id").as("truth_fp"))
-    probes.select("query_id", "probe1", "probe2")
-      .join(nCand, Seq("query_id"), "left")
-      .join(recall, Seq("query_id"), "left")
-      .join(truthFp, Seq("query_id"))
-      .select(col("query_id"), col("probe1"), col("probe2"),
-        coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-        coalesce(col("n_match"), lit(0L)).as("n_match"),
-        col("found_fp"), col("truth_fp"))
-      .smallSort("query_id")
+    val assigned = coarseIndex(st.qframe, st.ca, st.d, st.k).localCheckpoint()
+    val probes = probeSlice(st.qframe, st.ca, st.d, st.k, 2).localCheckpoint()
+    val cand = listJoin(assigned,
+      probes.select(col("query_id"), col("pqd"), col("pqq"), probedLists(2)))
+    recallAudit(Some(probes.select(col("query_id") +: numbered("probe", 2, 1): _*)),
+      Some(cand), Seq(Leg(ranked(cand, Cosine, 5), "n_match", Some("found_fp"))),
+      bruteTop(assigned, probes, Cosine, 5))
   }
 
   /** q150 — INCREMENTAL IVF index maintenance (FAISS `add_with_ids`):
@@ -652,7 +768,6 @@ object Similarity {
 
   def ivfIncremental(embeddings: DataFrame, k: Int,
                      iterations: Int): DataFrame = {
-    import graft.Serve._
     val base = embeddings.filter(col("vec_id") % 10 =!= 0)
     val batch = embeddings.filter(col("vec_id") % 10 === 0)
     val st = lloyd(base, k, iterations)
@@ -660,7 +775,7 @@ object Similarity {
     // the materialized frame IS what a store persists)
     val index = assignCols(st.qframe, st.ca, st.d, st.k)
       .select(col("vec_id"), col("cluster"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     // the add path: quantize + assign ONLY the batch against the same
     // literal centroids — map-side, batch-sized
     val added = assignCols(quantized(batch), st.ca, st.d, st.k)
@@ -705,60 +820,34 @@ object Similarity {
   def q154RandomProjection(t: T): DataFrame =
     randomProjection(t.embeddings, 16, 5)
 
-  /** The q154 JL projection as a reusable frame: (vec_id, pd, pq) where
-    * pd is the pDims-dim exact-integer projection of the quantized
+  /** The q154 JL projection as a reusable frame: (vec_id, qd, qq) where
+    * qd is the pDims-dim exact-integer projection of the quantized
     * vector against the deterministic ±1 sign matrix (tag "154:i:j" from
     * the portable hash — the driver holds pDims·64 longs, the engine
-    * sees constant-folded literals). Checkpointed: the projected frame
+    * sees constant-folded literals). Checkpointed (eagerly when `eager`,
+    * for a caller whose serving action is the first to read it; a
+    * trainer reading it first materializes it): the projected frame
     * IS what a store persists next to (or instead of) the full vectors
     * (the q143 build/search barrier). q154 audits this lever alone;
     * q158 feeds it into the IVF build — the composed serving path. */
-  private[graft] def jlProjected(q: DataFrame, pDims: Int): DataFrame = {
+  private[graft] def jlProjected(q: DataFrame, pDims: Int,
+                                 eager: Boolean): DataFrame = {
     val d = 64
     val signs = Array.tabulate(pDims)(j => Array.tabulate(d)(i =>
       if (md5h60(s"154:$i:$j") % 2 == 0) 1L else -1L))
     val projCols = (0 until pDims).map(j => vecDotLit("qd", signs(j)))
-    q.select(col("vec_id"), array(projCols: _*).as("pd"))
-      .withColumn("pq", expr("vec_dot(pd, pd)"))
-      .localCheckpoint(false)
+    q.select(col("vec_id"), array(projCols: _*).as("qd"))
+      .withColumn("qq", expr("vec_dot(qd, qd)"))
+      .localCheckpoint(eager)
   }
 
   def randomProjection(embeddings: DataFrame, pDims: Int,
                        k: Int): DataFrame = {
-    import graft.Serve._
-    val q = quantized(embeddings).localCheckpoint(false)
-    val proj = jlProjected(q, pDims)
-    val pQueries = proj.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("pd").as("qpd"),
-        col("pq").as("qpq"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    val searched = proj
-      .join(broadcast(pQueries), col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", round(
-        expr("vec_dot(pd, qpd)") / (sqrt(col("pq")) * sqrt(col("qpq"))), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select("query_id", "vec_id")
-    val fQueries = q.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("qd").as("qfd"),
-        col("qq").as("qfq"))
-    val truth = q
-      .join(broadcast(fQueries), col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", round(
-        expr("vec_dot(qd, qfd)") / (sqrt(col("qq")) * sqrt(col("qfq"))), 6))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select("query_id", "vec_id")
-    val rec = searched
-      .join(truth.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(count("hit").as("n_match"), sum("vec_id").as("proj_fp"))
-    val tf = truth.groupBy("query_id")
-      .agg(sum("vec_id").as("truth_fp"))
-    rec.join(tf, Seq("query_id"))
-      .select("query_id", "n_match", "proj_fp", "truth_fp")
-      .smallSort("query_id")
+    val q = quantized(embeddings).localCheckpoint()
+    val proj = jlProjected(q, pDims, eager = true)
+    recallAudit(None, None,
+      Seq(Leg(bruteTop(proj, querySlice(proj), Cosine, k), "n_match", Some("proj_fp"))),
+      bruteTop(q, querySlice(q), Cosine, k))
   }
 
   /** q157 — IVF-PQ with asymmetric distance and a recall audit: the
@@ -810,75 +899,15 @@ object Similarity {
       ivfPqTrainFused(qframe, kCoarse, coarseIters, m, ksub, subIters)
     val sub = d / m
     require(sub * m == d, s"d=$d must split into $m subspaces")
-    // the stored coarse index (q143's build/search barrier)
-    val assigned = assignCols(qframe, ca, d, kCoarse)
-      .select(col("vec_id"), col("cluster"), col("qd"), col("qq"))
-      .localCheckpoint(false)
-    // |x_s − c_j|² = x_s·x_s − 2·x_s·c_j + c_j·c_j against the literal
-    // codebook slice — every term an exact integer held as a double
-    // ENCODE: per subspace an in-row argmin over the 8 literal
-    // centroids (ties to the smallest code — the assignCols device);
-    // the checkpointed frame IS the PQ index a store persists.
-    // Every frame the serving action reads is checkpointed EAGERLY: a
-    // lazy checkpoint first computed inside the AQE action truncates its
-    // lineage while a concurrent query-stage job's DAG walk reads it
-    // (NPE "RDD.dependencies() is null"; ServingCheckpointSpec). The
-    // other IVF-PQ pipelines below follow the same rule.
-    val index = pqEncode(assigned, codebooks, sub, ksub, "qd")
-      .select(col("vec_id") :: col("cluster") ::
-        (0 until m).map(s => col(s"code$s")).toList: _*)
-      .localCheckpoint()
+    val assigned = coarseIndex(qframe, ca, d, kCoarse).localCheckpoint(false)
+    // ENCODE: per subspace an in-row argmin over the 8 literal centroids
+    // (ties to the smallest code — the assignCols device)
+    val index = pqIndex(assigned, codebooks, sub, ksub, "qd")
     // query side: the 4×8 ADC distance tables as array columns — 10
     // rows of driver-bounded model state, broadcast into the list join
-    val queries = adcTables(
-      assigned.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("cluster"),
-          col("qd").as("pqd"), col("qq").as("pqq")),
+    val queries = adcTables(querySlice(assigned, col("cluster")),
       codebooks, "pqd", sub, ksub).localCheckpoint()
-    // serving leg: nprobe=1 list join, ADC = four table lookups summed
-    val cand = index
-      .join(broadcast(queries.select(col("query_id") :: col("cluster") ::
-        (0 until m).map(s => col(s"dt$s")).toList: _*)), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc", expr("CAST(" + (0 until m)
-        .map(s => s"element_at(dt$s, code$s)").mkString(" + ") +
-        " AS BIGINT)"))
-    val nCand = cand.groupBy("query_id")
-      .agg(count(lit(1)).as("n_candidates"))
-    val wS = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("vec_id").asc)
-    val searched = cand
-      .withColumn("rk", row_number().over(wS))
-      .filter(col("rk") <= topk)
-      .select("query_id", "vec_id")
-    // audit leg: EXACT squared-L2 truth over the full corpus — pure
-    // integer arithmetic end to end (the bounded offline recall job)
-    val truth = assigned.select("vec_id", "qd", "qq")
-      .join(broadcast(queries.select("query_id", "pqd", "pqq")),
-        col("vec_id") =!= col("query_id"))
-      .withColumn("l2",
-        expr("CAST(qq + pqq - 2 * vec_dot(qd, pqd) AS BIGINT)"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("l2").asc, col("vec_id").asc)))
-      .filter(col("rk") <= topk)
-      .select("query_id", "vec_id")
-    val rec = searched
-      .join(truth.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(sum("hit").as("n_match"), sum("vec_id").as("adc_fp"))
-    val tf = truth.groupBy("query_id").agg(sum("vec_id").as("truth_fp"))
-    // left-join the candidate-derived legs: a query whose probed list is
-    // otherwise empty (singleton coarse cell) must still emit its audit
-    // row as n_candidates=0/n_match=0, not silently vanish
-    queries.select(col("query_id"), col("cluster").as("probe"))
-      .join(nCand, Seq("query_id"), "left")
-      .join(rec, Seq("query_id"), "left")
-      .join(tf, Seq("query_id"))
-      .select(col("query_id"), col("probe"),
-        coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-        coalesce(col("n_match"), lit(0L)).as("n_match"),
-        col("adc_fp"), col("truth_fp"))
-      .smallSort("query_id")
+    servePq(index, queries, assigned, m, topk)
   }
 
   /** q158 — the COMPOSED ANN serving path: q154's JL projection feeding
@@ -908,88 +937,24 @@ object Similarity {
   def jlIvf(embeddings: DataFrame, pDims: Int, k: Int, iters: Int,
             nprobe: Int, topk: Int): DataFrame = {
     val q = quantized(embeddings).localCheckpoint(false)
-    val proj = jlProjected(q, pDims)
     // IVF over the projected space: the same Lloyd engine, 16-d input
-    val pframe = proj.select(col("vec_id"), col("pd").as("qd"),
-      col("pq").as("qq"))
-    val (ca, _, d) = lloydCore(pframe, k, iters, seedTag = 158)
-    // assigned, probes and truth are checkpointed EAGERLY, like the
-    // IVF-PQ serving frames (ivfPq): the serving action reads all three
-    val assigned = assignCols(pframe, ca, d, k)
-      .select(col("vec_id"), col("cluster"), col("qd"), col("qq"))
-      .localCheckpoint()
-    // per-query nprobe nearest centroids in projected space (q147's
-    // in-row struct sort — 10 rows, no shuffle)
-    val withDists = coarseDistCols(pframe.filter(col("vec_id") < 10), ca, d, k)
-    val probes = withDists
-      .withColumn("ps", expr("array_sort(array(" + (1 to k)
-        .map(j => s"struct(s$j AS d, $j AS c)").mkString(", ") + "))"))
-      .select(col("vec_id").as("query_id") :: col("qd").as("pqd") ::
-        col("qq").as("pqq") ::
-        (0 until nprobe).map(i => expr(s"ps[$i].c").as(s"probe${i + 1}"))
-          .toList: _*)
-      .localCheckpoint()
-    val cosine = round(
-      expr("vec_dot(qd, pqd)") / (sqrt(col("qq")) * sqrt(col("pqq"))), 6)
+    val proj = jlProjected(q, pDims, eager = false)
+    val (ca, _, d) = train(proj, k, iters, seedTag = 158)
+    val assigned = coarseIndex(proj, ca, d, k).localCheckpoint()
+    val probes = probeSlice(proj, ca, d, k, nprobe).localCheckpoint()
     // composed serving leg: union of the probed lists, projected cosine
-    val cand = assigned
-      .join(broadcast(probes.select(col("query_id"), col("pqd"), col("pqq"),
-        explode(array((1 to nprobe).map(i => col(s"probe$i")): _*))
-          .as("cluster"))), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-    val nCand = cand.groupBy("query_id")
-      .agg(count(lit(1)).as("n_candidates"))
-    val wS = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("vec_id").asc)
-    val searched = cand.withColumn("cosine", cosine)
-      .withColumn("rk", row_number().over(wS))
-      .filter(col("rk") <= topk)
-      .select("query_id", "vec_id")
-    // single-lever leg: JL projection alone, brute over the corpus
-    // (q154's searched leg — the baseline the composition is audited
-    // against)
-    val jlBrute = proj
-      .select(col("vec_id"), col("pd").as("qd"), col("pq").as("qq"))
-      .join(broadcast(probes.select("query_id", "pqd", "pqq")),
-        col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", cosine)
-      .withColumn("rk", row_number().over(wS))
-      .filter(col("rk") <= topk)
-      .select("query_id", "vec_id")
-    // truth: full-dimension cosine top-5 (q154's truth leg)
-    val fQueries = q.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("qd").as("qfd"),
-        col("qq").as("qfq"))
-    val truth = q
-      .join(broadcast(fQueries), col("vec_id") =!= col("query_id"))
-      .withColumn("cosine", round(
-        expr("vec_dot(qd, qfd)") / (sqrt(col("qq")) * sqrt(col("qfq"))), 6))
-      .withColumn("rk", row_number().over(wS))
-      .filter(col("rk") <= topk)
-      .select("query_id", "vec_id")
-      .localCheckpoint() // consumed by BOTH recall joins
-    val rec = searched
-      .join(truth.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(count("hit").as("n_match"), sum("vec_id").as("found_fp"))
-    val recJl = jlBrute
-      .join(truth.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(count("hit").as("n_match_jl"))
-    val tf = truth.groupBy("query_id")
-      .agg(sum("vec_id").as("truth_fp"))
-    probes.select(col("query_id") ::
-      (1 to nprobe).map(i => col(s"probe$i")).toList: _*)
-      .join(nCand, Seq("query_id"), "left")
-      .join(rec, Seq("query_id"), "left")
-      .join(recJl, Seq("query_id"))
-      .join(tf, Seq("query_id"))
-      .select(col("query_id") ::
-        (1 to nprobe).map(i => col(s"probe$i")).toList :::
-        List(coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-          coalesce(col("n_match"), lit(0L)).as("n_match"),
-          col("n_match_jl"), col("found_fp"), col("truth_fp")): _*)
-      .smallSort("query_id")
+    val cand = listJoin(assigned,
+      probes.select(col("query_id"), col("pqd"), col("pqq"), probedLists(nprobe)))
+    recallAudit(Some(probes.select(col("query_id") +: numbered("probe", nprobe, 1): _*)),
+      Some(cand), Seq(
+        Leg(ranked(cand, Cosine, topk), "n_match", Some("found_fp")),
+        // single-lever leg: JL projection alone, brute over the corpus
+        // (q154's searched leg — the baseline the composition is audited
+        // against)
+        Leg(bruteTop(proj, probes, Cosine, topk), "n_match_jl")),
+      // truth: full-dimension cosine top-k (q154's truth leg), read by
+      // both recall joins
+      bruteTop(q, querySlice(q), Cosine, topk).localCheckpoint())
   }
 
   /** q157's whole training stack in lockstep: the coarse quantizer
@@ -1008,7 +973,8 @@ object Similarity {
       subIters: Int): (Array[Long], Seq[Array[Long]], Int) =
     PlanScope(frame.sparkSession, PlanScope.ModelReduce) { scope =>
     val qframe = scope.in(frame)
-    val d = qframe.select(expr("size(qd)")).head().getInt(0)
+    // d = 0 on an empty frame: every model is then empty
+    val d = qframe.select(expr("size(qd)")).head(1).headOption.fold(0)(_.getInt(0))
     val sub = d / m
     val models = TrainModel(-1, 143, kCoarse, 0, d) +:
       subspaceModels(m, sub, ksub, 15700)
@@ -1053,76 +1019,12 @@ object Similarity {
 
   def ivfPqResidual(embeddings: DataFrame, kCoarse: Int, coarseIters: Int,
                     m: Int, ksub: Int, subIters: Int, topk: Int): DataFrame = {
-    val qframe = quantized(embeddings).localCheckpoint(false)
-    // residual training NEEDS the final coarse model before codebooks
-    // can see a residual, so coarse trains first (no cross-fusion here;
-    // the subspace trainings still fuse with each other below)
-    val (ca, _, d) = lloydCore(qframe, kCoarse, coarseIters, seedTag = 143)
-    val sub = d / m
-    require(sub * m == d, s"d=$d must split into $m subspaces")
-    // the stored coarse index plus the residual rd = qd − centroid(cluster)
-    // (residualCol) in ONE projection and ONE checkpoint; the truth leg
-    // reads qd/qq from it too
-    val rframe = assignCols(qframe, ca, d, kCoarse)
-      .select(col("vec_id"), col("cluster"), col("qd"), col("qq"),
-        residualCol(ca, kCoarse, d).as("rd"))
-      .localCheckpoint(false)
-    val codebooks = pqTrainFused(
-      rframe.select(col("vec_id"), col("rd").as("qd")),
-      m, sub, ksub, subIters, tagBase = 16000)
-    // ENCODE over residual slices (q157's in-row argmin device)
-    val index = pqEncode(rframe, codebooks, sub, ksub, "rd")
-      .select(col("vec_id") :: col("cluster") ::
-        (0 until m).map(s => col(s"code$s")).toList: _*)
-      .localCheckpoint()
+    val r = residualIndex(embeddings, kCoarse, coarseIters, m, ksub, subIters)
     // query side: ADC tables over the query's OWN residual (nprobe=1:
     // the probed list is the query's assignment, so q − c_list = rd)
-    val queries = adcTables(
-      rframe.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("query_id"), col("cluster"),
-          col("qd").as("pqd"), col("qq").as("pqq"), col("rd")),
-      codebooks, "rd", sub, ksub).drop("rd").localCheckpoint()
-    val cand = index
-      .join(broadcast(queries.select(col("query_id") :: col("cluster") ::
-        (0 until m).map(s => col(s"dt$s")).toList: _*)), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc", expr("CAST(" + (0 until m)
-        .map(s => s"element_at(dt$s, code$s)").mkString(" + ") +
-        " AS BIGINT)"))
-    val nCand = cand.groupBy("query_id")
-      .agg(count(lit(1)).as("n_candidates"))
-    val wS = Window.partitionBy("query_id")
-      .orderBy(col("adc").asc, col("vec_id").asc)
-    val searched = cand
-      .withColumn("rk", row_number().over(wS))
-      .filter(col("rk") <= topk)
-      .select("query_id", "vec_id")
-    val truth = rframe.select("vec_id", "qd", "qq")
-      .join(broadcast(queries.select("query_id", "pqd", "pqq")),
-        col("vec_id") =!= col("query_id"))
-      .withColumn("l2",
-        expr("CAST(qq + pqq - 2 * vec_dot(qd, pqd) AS BIGINT)"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("l2").asc, col("vec_id").asc)))
-      .filter(col("rk") <= topk)
-      .select("query_id", "vec_id")
-    val rec = searched
-      .join(truth.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(sum("hit").as("n_match"), sum("vec_id").as("adc_fp"))
-    val tf = truth.groupBy("query_id").agg(sum("vec_id").as("truth_fp"))
-    // left-join the candidate-derived legs: a query whose probed list is
-    // otherwise empty (singleton coarse cell) must still emit its audit
-    // row as n_candidates=0/n_match=0, not silently vanish
-    queries.select(col("query_id"), col("cluster").as("probe"))
-      .join(nCand, Seq("query_id"), "left")
-      .join(rec, Seq("query_id"), "left")
-      .join(tf, Seq("query_id"))
-      .select(col("query_id"), col("probe"),
-        coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-        coalesce(col("n_match"), lit(0L)).as("n_match"),
-        col("adc_fp"), col("truth_fp"))
-      .smallSort("query_id")
+    val queries = adcTables(querySlice(r.rframe, col("cluster"), col("rd")),
+      r.codebooks, "rd", r.sub, ksub).drop("rd").localCheckpoint()
+    servePq(r.index, queries, r.rframe, m, topk)
   }
 
   /** q161 — the FULL ANN serving stack composed: JL projection (q154's
@@ -1150,14 +1052,10 @@ object Similarity {
               nprobe: Int, m: Int, ksub: Int, subIters: Int,
               topk: Int): DataFrame = {
     val q = quantized(embeddings).localCheckpoint(false)
-    val proj = jlProjected(q, pDims)
-    val pframe = proj.select(col("vec_id"), col("pd").as("qd"),
-      col("pq").as("qq"))
+    val proj = jlProjected(q, pDims, eager = false)
     val sub = pDims / m
-    val (ca, _, d) = lloydCore(pframe, k, iters, seedTag = 158)
-    val assigned = assignCols(pframe, ca, d, k)
-      .select(col("vec_id"), col("cluster"), col("qd"), col("qq"))
-      .localCheckpoint(false)
+    val (ca, _, d) = train(proj, k, iters, seedTag = 158)
+    val assigned = coarseIndex(proj, ca, d, k).localCheckpoint(false)
     val codebooks = pqTrainFused(
       assigned.select(col("vec_id"), col("qd")),
       m, sub, ksub, subIters, tagBase = 16100)
@@ -1165,82 +1063,23 @@ object Similarity {
     // exact-in-list audit leg reads the same frame (a store would
     // persist codes only — the full columns here ARE the audit input)
     val index = pqEncode(assigned, codebooks, sub, ksub, "qd").localCheckpoint()
-    // per-query nprobe nearest centroids in projected space (q158's
-    // in-row struct sort) + the 4×8 ADC tables over the query's slices
-    val withDists = coarseDistCols(pframe.filter(col("vec_id") < 10), ca, d, k)
-    val probes0 = withDists
-      .withColumn("ps", expr("array_sort(array(" + (1 to k)
-        .map(j => s"struct(s$j AS d, $j AS c)").mkString(", ") + "))"))
-      .select(col("vec_id").as("query_id") :: col("qd").as("pqd") ::
-        col("qq").as("pqq") ::
-        (0 until nprobe).map(i => expr(s"ps[$i].c").as(s"probe${i + 1}"))
-          .toList: _*)
-    val probes = adcTables(probes0, codebooks, "pqd", sub, ksub)
-      .localCheckpoint()
+    // per-query nprobe nearest centroids + the 4×8 ADC tables over the
+    // query's slices
+    val probes = adcTables(probeSlice(proj, ca, d, k, nprobe),
+      codebooks, "pqd", sub, ksub).localCheckpoint()
     // the candidate frame both rankings read: union of the probed
     // lists, carrying codes (for ADC) and qd/qq (for the exact leg)
-    val cand = index
-      .join(broadcast(probes.select(col("query_id") :: col("pqd") ::
-        col("pqq") ::
-        explode(array((1 to nprobe).map(i => col(s"probe$i")): _*))
-          .as("cluster") ::
-        (0 until m).map(s => col(s"dt$s")).toList: _*)), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .localCheckpoint()
-    val nCand = cand.groupBy("query_id")
-      .agg(count(lit(1)).as("n_candidates"))
-    val adcRanked = cand
-      .withColumn("adc", expr("CAST(" + (0 until m)
-        .map(s => s"element_at(dt$s, code$s)").mkString(" + ") +
-        " AS BIGINT)"))
-      .withColumn("rk", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("adc").asc, col("vec_id").asc)))
-      .filter(col("rk") <= topk)
-      .select("query_id", "vec_id")
-    // exact-in-list leg: same candidates, exact projected L2 — the
-    // delta vs adcRanked isolates the PQ lever's cost
-    val exactRanked = cand
-      .withColumn("l2",
-        expr("CAST(qq + pqq - 2 * vec_dot(qd, pqd) AS BIGINT)"))
-      .withColumn("rk", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("l2").asc, col("vec_id").asc)))
-      .filter(col("rk") <= topk)
-      .select("query_id", "vec_id")
-    // truth: FULL-dimension exact squared-L2 (the q157 audit form)
-    val fQueries = q.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("qd").as("fqd"),
-        col("qq").as("fqq"))
-    val truthTop = q
-      .join(broadcast(fQueries), col("vec_id") =!= col("query_id"))
-      .withColumn("l2",
-        expr("CAST(qq + fqq - 2 * vec_dot(qd, fqd) AS BIGINT)"))
-      .withColumn("rk", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("l2").asc, col("vec_id").asc)))
-      .filter(col("rk") <= topk)
-      .select("query_id", "vec_id")
-      .localCheckpoint() // two recall joins read it
-    val rec = adcRanked
-      .join(truthTop.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(count("hit").as("n_match"), sum("vec_id").as("found_fp"))
-    val recL = exactRanked
-      .join(truthTop.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(count("hit").as("n_match_list"))
-    val tf = truthTop.groupBy("query_id").agg(sum("vec_id").as("truth_fp"))
-    probes.select(col("query_id") ::
-      (1 to nprobe).map(i => col(s"probe$i")).toList: _*)
-      .join(nCand, Seq("query_id"), "left")
-      .join(rec, Seq("query_id"), "left")
-      .join(recL, Seq("query_id"), "left")
-      .join(tf, Seq("query_id"))
-      .select(col("query_id") ::
-        (1 to nprobe).map(i => col(s"probe$i")).toList :::
-        List(coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-          coalesce(col("n_match"), lit(0L)).as("n_match"),
-          coalesce(col("n_match_list"), lit(0L)).as("n_match_list"),
-          col("found_fp"), col("truth_fp")): _*)
-      .smallSort("query_id")
+    val cand = listJoin(index, probes.select(Seq(col("query_id"), col("pqd"),
+      col("pqq"), probedLists(nprobe)) ++ numbered("dt", m): _*)).localCheckpoint()
+    recallAudit(Some(probes.select(col("query_id") +: numbered("probe", nprobe, 1): _*)),
+      Some(cand), Seq(
+        Leg(ranked(cand, adc(m), topk), "n_match", Some("found_fp")),
+        // exact-in-list leg: same candidates, exact projected L2 — the
+        // delta vs the ADC leg isolates the PQ lever's cost
+        Leg(ranked(cand, L2, topk), "n_match_list")),
+      // truth: FULL-dimension exact squared-L2 (the q157 audit form),
+      // read by both recall joins
+      bruteTop(q, querySlice(q), L2, topk).localCheckpoint())
   }
 
   /** q162 — MULTI-PROBE residual IVF-PQ: the serving shape q160's
@@ -1274,118 +1113,30 @@ object Similarity {
   def ivfPqResidualMultiprobe(embeddings: DataFrame, kCoarse: Int,
       coarseIters: Int, m: Int, ksub: Int, subIters: Int, nprobe: Int,
       topk: Int, rerank: Int = 0): DataFrame = {
-    val qframe = quantized(embeddings).localCheckpoint(false)
-    val (ca, _, d) = lloydCore(qframe, kCoarse, coarseIters, seedTag = 143)
-    val sub = d / m
-    require(sub * m == d, s"d=$d must split into $m subspaces")
-    // coarse index + residual in ONE checkpoint (ivfPqResidual's frame)
-    val rframe = assignCols(qframe, ca, d, kCoarse)
-      .select(col("vec_id"), col("cluster"), col("qd"), col("qq"),
-        residualCol(ca, kCoarse, d).as("rd"))
-      .localCheckpoint(false)
-    // the SAME codebooks as q160 — one trained model serves both
-    val codebooks = pqTrainFused(
-      rframe.select(col("vec_id"), col("rd").as("qd")),
-      m, sub, ksub, subIters, tagBase = 16000)
-    val index = pqEncode(rframe, codebooks, sub, ksub, "rd")
-      .select(col("vec_id") :: col("cluster") ::
-        (0 until m).map(s => col(s"code$s")).toList: _*)
-      .localCheckpoint()
-    // probe selection: nprobe nearest centroids per query (q147's
-    // in-row struct sort against the coarse literals)
-    val withDists = coarseDistCols(qframe.filter(col("vec_id") < 10), ca, d, kCoarse)
-    val probes0 = withDists
-      .withColumn("ps", expr("array_sort(array(" + (1 to kCoarse)
-        .map(j => s"struct(s$j AS d, $j AS c)").mkString(", ") + "))"))
-      .select(col("vec_id").as("query_id") :: col("qd").as("pqd") ::
-        col("qq").as("pqq") ::
-        (0 until nprobe).map(i => expr(s"ps[$i].c").as(s"probe${i + 1}"))
-          .toList: _*)
-      .localCheckpoint()
+    // the SAME trained model and index as q160
+    val r = residualIndex(embeddings, kCoarse, coarseIters, m, ksub, subIters)
+    val probes = probeSlice(r.qframe, r.ca, r.d, kCoarse, nprobe).localCheckpoint()
     // PER-(query, list) ADC tables: the probe rows explode, each takes
     // the residual against ITS list's centroid, tables ride the row
     val probesX = adcTables(
-      probes0.select(col("query_id"), col("pqd"),
-        explode(array((1 to nprobe).map(i => col(s"probe$i")): _*))
-          .as("cluster"))
-        .withColumn("rdl", residualCol(ca, kCoarse, d, "pqd")),
-      codebooks, "rdl", sub, ksub)
-      .select(col("query_id") :: col("cluster") ::
-        (0 until m).map(s => col(s"dt$s")).toList: _*)
+      probes.select(col("query_id"), col("pqd"), probedLists(nprobe))
+        .withColumn("rdl", residualCol(r.ca, kCoarse, r.d, "pqd")),
+      r.codebooks, "rdl", r.sub, ksub)
+      .select(col("query_id") +: col("cluster") +: numbered("dt", m): _*)
       .localCheckpoint()
-    val cand = index
-      .join(broadcast(probesX), Seq("cluster"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("adc", expr("CAST(" + (0 until m)
-        .map(s => s"element_at(dt$s, code$s)").mkString(" + ") +
-        " AS BIGINT)"))
-    val nCand = cand.groupBy("query_id")
-      .agg(count(lit(1)).as("n_candidates"))
-    val searched = cand
-      .withColumn("rk", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("adc").asc, col("vec_id").asc)))
-      .filter(col("rk") <= topk)
-      .select("query_id", "vec_id")
-    val truth = rframe.select("vec_id", "qd", "qq")
-      .join(broadcast(probes0.select("query_id", "pqd", "pqq")),
-        col("vec_id") =!= col("query_id"))
-      .withColumn("l2",
-        expr("CAST(qq + pqq - 2 * vec_dot(qd, pqd) AS BIGINT)"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("l2").asc, col("vec_id").asc)))
-      .filter(col("rk") <= topk)
-      .select("query_id", "vec_id")
-    val rec = searched
-      .join(truth.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(count("hit").as("n_match"), sum("vec_id").as("adc_fp"))
-    val tf = truth.groupBy("query_id").agg(sum("vec_id").as("truth_fp"))
-    val base = probes0.select(col("query_id") ::
-      (1 to nprobe).map(i => col(s"probe$i")).toList: _*)
-      .join(nCand, Seq("query_id"), "left")
-      .join(rec, Seq("query_id"), "left")
-      .join(tf, Seq("query_id"))
-    if (rerank <= 0)
-      base.select(col("query_id") ::
-        (1 to nprobe).map(i => col(s"probe$i")).toList :::
-        List(coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-          coalesce(col("n_match"), lit(0L)).as("n_match"),
-          col("adc_fp"), col("truth_fp")): _*)
-        .smallSort("query_id")
-    else {
-      // exact re-rank: the ADC top-`rerank` shortlist fetches its full
-      // vectors by id (broadcast the bounded shortlist into the store
-      // join — `rerank` rows per query, never corpus-sized) and the
-      // exact squared-L2 reorders it; top-k of that is the served set
-      val short = cand
-        .withColumn("rk", row_number().over(Window.partitionBy("query_id")
-          .orderBy(col("adc").asc, col("vec_id").asc)))
-        .filter(col("rk") <= rerank)
-        .select("query_id", "vec_id")
-      val rrTop = rframe.select("vec_id", "qd", "qq")
-        .join(broadcast(short), Seq("vec_id"))
-        .join(broadcast(probes0.select("query_id", "pqd", "pqq")),
-          Seq("query_id"))
-        .withColumn("l2",
-          expr("CAST(qq + pqq - 2 * vec_dot(qd, pqd) AS BIGINT)"))
-        .withColumn("rk", row_number().over(Window.partitionBy("query_id")
-          .orderBy(col("l2").asc, col("vec_id").asc)))
-        .filter(col("rk") <= topk)
-        .select("query_id", "vec_id")
-      val recR = rrTop
-        .join(truth.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
-        .groupBy("query_id")
-        .agg(count("hit").as("n_match_rerank"), sum("vec_id").as("rerank_fp"))
-      base
-        .join(recR, Seq("query_id"), "left")
-        .select(col("query_id") ::
-          (1 to nprobe).map(i => col(s"probe$i")).toList :::
-          List(coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
-            coalesce(col("n_match"), lit(0L)).as("n_match"),
-            coalesce(col("n_match_rerank"), lit(0L)).as("n_match_rerank"),
-            col("adc_fp"), col("rerank_fp"), col("truth_fp")): _*)
-        .smallSort("query_id")
-    }
+    val cand = listJoin(r.index, probesX)
+    // exact re-rank: the ADC top-`rerank` shortlist fetches its full
+    // vectors by id (broadcast the bounded shortlist into the store
+    // join — `rerank` rows per query, never corpus-sized) and the
+    // exact squared-L2 reorders it; top-k of that is the served set
+    val reranked = if (rerank <= 0) Nil else Seq(Leg(ranked(
+      r.rframe.select("vec_id", "qd", "qq")
+        .join(broadcast(ranked(cand, adc(m), rerank)), Seq("vec_id"))
+        .join(broadcast(probes.select("query_id", "pqd", "pqq")), Seq("query_id")),
+      L2, topk), "n_match_rerank", Some("rerank_fp")))
+    recallAudit(Some(probes.select(col("query_id") +: numbered("probe", nprobe, 1): _*)),
+      Some(cand), Leg(ranked(cand, adc(m), topk), "n_match", Some("adc_fp")) +: reranked,
+      bruteTop(r.rframe, probes, L2, topk))
   }
 
   /** PLANTED-NEIGHBOR evaluation corpus for the ANN recall audits
@@ -1594,17 +1345,21 @@ object Similarity {
     * dt0..dt{m-1}, temporaries dropped). */
   private def adcTables(df: DataFrame, codebooks: Seq[Array[Long]],
                         src: String, sub: Int, ksub: Int): DataFrame = {
-    val m = codebooks.size
-    val withSub = df.select(df.columns.map(col) ++ (0 until m).map(s =>
-      expr(s"slice($src, ${s * sub + 1}, $sub)").as(s"__sqd$s")): _*)
-    val withQq = withSub.select(withSub.columns.map(col) ++
-      (0 until m).map(s =>
-        expr(s"vec_dot(__sqd$s, __sqd$s)").as(s"__sqq$s")): _*)
     val tables = codebooks.zipWithIndex.map { case (cb, s) =>
       array((1 to ksub).map(j =>
         subDist(cb, j, sub, s"__sqd$s", s"__sqq$s")): _*).as(s"dt$s")
     }
-    withQq.select(df.columns.map(col) ++ tables: _*)
+    subSlices(df, codebooks.size, src, sub).select(df.columns.map(col) ++ tables: _*)
+  }
+
+  /** `frame` plus, per subspace s, the `sub`-wide slice __sqd$s of `src`
+    * and its norm² __sqq$s: the prefix adcTables and pqEncode share. */
+  private def subSlices(frame: DataFrame, m: Int, src: String,
+                        sub: Int): DataFrame = {
+    val withSub = frame.select(frame.columns.map(col) ++ (0 until m).map(s =>
+      expr(s"slice($src, ${s * sub + 1}, $sub)").as(s"__sqd$s")): _*)
+    withSub.select(withSub.columns.map(col) ++ (0 until m).map(s =>
+      expr(s"vec_dot(__sqd$s, __sqd$s)").as(s"__sqq$s")): _*)
   }
 
   /** PQ ENCODE: per subspace s an in-row argmin over the ksub literal
@@ -1621,12 +1376,7 @@ object Similarity {
     // coarseDistCols analyzer-pass argument (r18 optimization round);
     // identical expressions, identical output columns (frame.columns ++
     // code0..m-1), temporaries dropped by the final projection.
-    val m = codebooks.size
-    val withSub = frame.select(frame.columns.map(col) ++ (0 until m).map(s =>
-      expr(s"slice($src, ${s * sub + 1}, $sub)").as(s"__sqd$s")): _*)
-    val withQq = withSub.select(withSub.columns.map(col) ++
-      (0 until m).map(s =>
-        expr(s"vec_dot(__sqd$s, __sqd$s)").as(s"__sqq$s")): _*)
+    val withQq = subSlices(frame, codebooks.size, src, sub)
     val withD = withQq.select(withQq.columns.map(col) ++
       codebooks.zipWithIndex.flatMap { case (cb, s) =>
         (1 to ksub).map(j =>
@@ -1709,7 +1459,7 @@ object Similarity {
   private def subspaceCell(m: Int, sub: Int): Column = {
     val s = expr(s"CAST(pos DIV $sub AS INT)")
     struct(s.as("ss"),
-      element_at(array((0 until m).map(i => col(s"code$i")): _*), s + 1)
+      element_at(array(numbered("code", m): _*), s + 1)
         .as("cluster"),
       expr(s"pos % $sub").as("dim"))
   }

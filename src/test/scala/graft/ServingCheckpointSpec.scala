@@ -6,7 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The IVF and IVF-PQ pipelines materialize every checkpointed frame
+/** The IVF, IVF-PQ and JL pipelines materialize every checkpointed frame
   * before their serving action runs. A lazy `localCheckpoint(false)`
   * frame first computed inside the action races: the job that
   * materializes it truncates its lineage while the DAG scheduler walks
@@ -42,14 +42,19 @@ class ServingCheckpointSpec extends SparkSpec {
     assert(blocksStoredBy(q165).isEmpty)
   }
 
-  test("the other IVF-PQ serving actions store no checkpoint block") {
+  test("the other ANN serving actions store no checkpoint block") {
     val pipelines = Seq(
       "ivfPq" -> Similarity.ivfPq(planted500, 10, 3, 4, 8, 2, 5),
       "ivfPqResidualMultiprobe" ->
         Similarity.ivfPqResidualMultiprobe(planted500, 10, 3, 4, 8, 2, 2, 5),
-      "jlIvfPq" -> Similarity.jlIvfPq(planted500, 16, 10, 3, 2, 4, 8, 2, 5))
-    for ((name, df) <- pipelines)
-      assert(blocksStoredBy(df).isEmpty, name)
+      "jlIvfPq" -> Similarity.jlIvfPq(planted500, 16, 10, 3, 2, 4, 8, 2, 5),
+      "ivfLearned" -> Similarity.ivfLearned(planted500, 10, 3),
+      "ivfMultiprobe" -> Similarity.ivfMultiprobe(planted500, 10, 3),
+      "ivfIncremental" -> Similarity.ivfIncremental(planted500, 10, 3),
+      "randomProjection" -> Similarity.randomProjection(planted500, 16, 5))
+    val storing = pipelines.collect {
+      case (name, df) if blocksStoredBy(df).nonEmpty => name }
+    assert(storing.isEmpty)
   }
 
   test("q158/q167's JL-IVF serving action stores no checkpoint block") {
