@@ -608,19 +608,24 @@ object Similarity {
     * bit-for-bit. The candidate-derived counts join LEFT from the keys:
     * a query whose probed list has no other member still emits
     * n_candidates = 0 and n_match = 0 rather than vanish; the truth joins
-    * inner. Without keys the first leg's counts are the base. */
+    * inner. Without keys the first leg's counts are the base. Every right
+    * side joined here is small by construction — the truth is k rows per
+    * query, every count frame one row per query (≤ 10) — so each is
+    * broadcast: left to AQE, these joins switched between broadcast,
+    * shuffled-hash and sort-merge plans from run to run as query stages
+    * finished. */
   private[graft] def recallAudit(keys: Option[DataFrame], cand: Option[DataFrame],
                                  legs: Seq[Leg], truth: DataFrame): DataFrame = {
     val nCand = cand.map(_.groupBy("query_id").agg(count(lit(1)).as("n_candidates")))
     val matches = legs.map(l =>
-      l.top.join(truth.withColumn("hit", lit(1)), Seq("query_id", "vec_id"), "left")
+      l.top.join(broadcast(truth.withColumn("hit", lit(1))), Seq("query_id", "vec_id"), "left")
         .groupBy("query_id")
         .agg(sum("hit").as(l.nMatch), l.fp.map(sum("vec_id").as(_)).toSeq: _*))
     val tf = truth.groupBy("query_id").agg(sum("vec_id").as("truth_fp"))
     val parts = keys.toSeq ++ nCand ++ matches
     val counts = nCand.map(_ => "n_candidates").toSeq ++ legs.map(_.nMatch)
-    parts.tail.foldLeft(parts.head)(_.join(_, Seq("query_id"), "left"))
-      .join(tf, Seq("query_id"))
+    parts.tail.foldLeft(parts.head)((l, r) => l.join(broadcast(r), Seq("query_id"), "left"))
+      .join(broadcast(tf), Seq("query_id"))
       .select(keys.fold(Seq(col("query_id")))(_.columns.toSeq.map(col)) ++
         counts.map(c => coalesce(col(c), lit(0L)).as(c)) ++
         legs.flatMap(_.fp).map(col) :+ col("truth_fp"): _*)
