@@ -528,8 +528,9 @@ object Similarity {
     * vec_id < 10 every ANN pipeline serves and audits: query_id, `cols`,
     * then the query vector as (pqd, pqq). */
   private def querySlice(frame: DataFrame, cols: Column*): DataFrame =
-    frame.filter(col("vec_id") < 10).select((col("vec_id").as("query_id") +: cols) ++
-      Seq(col("qd").as("pqd"), col("qq").as("pqq")): _*)
+    frame.filter(col("vec_id") < 10).select(
+      (col("vec_id").as("query_id") +: cols) ++
+        Seq(col("qd").as("pqd"), col("qq").as("pqq")): _*)
 
   /** The query slice with each query's `nprobe` nearest centroids of `ca`
     * as probe1..probe{nprobe} (FAISS `nprobe`): the k distance columns
@@ -560,8 +561,9 @@ object Similarity {
   /** Cosine over quantized vectors, rounded to 6 places: the dot and both
     * norm² terms are exact integers < 2^53, so only the final sqrt and
     * divide are FP, on identical operand bits in both engines. */
-  private val Cosine = Score("cosine", round(
-    expr("vec_dot(qd, pqd)") / (sqrt(col("qq")) * sqrt(col("pqq"))), 6), descending = true)
+  private val Cosine = Score("cosine",
+    round(expr("vec_dot(qd, pqd)") / (sqrt(col("qq")) * sqrt(col("pqq"))), 6),
+    descending = true)
 
   /** Exact squared L2: integer arithmetic end to end. */
   private val L2 = Score("l2",
@@ -575,7 +577,8 @@ object Similarity {
 
   /** The top `k` rows per query by `s`, ties to the smaller vec_id: the
     * rows with their score and their rank in column `rank`. */
-  private def topK(df: DataFrame, s: Score, k: Int, rank: String = "rk"): DataFrame =
+  private def topK(df: DataFrame, s: Score, k: Int,
+                   rank: String = "rk"): DataFrame =
     df.withColumn(s.name, s.value)
       .withColumn(rank, row_number().over(Window.partitionBy("query_id").orderBy(
         if (s.descending) col(s.name).desc else col(s.name).asc, col("vec_id").asc)))
@@ -614,17 +617,20 @@ object Similarity {
     * broadcast: left to AQE, these joins switched between broadcast,
     * shuffled-hash and sort-merge plans from run to run as query stages
     * finished. */
-  private[graft] def recallAudit(keys: Option[DataFrame], cand: Option[DataFrame],
-                                 legs: Seq[Leg], truth: DataFrame): DataFrame = {
-    val nCand = cand.map(_.groupBy("query_id").agg(count(lit(1)).as("n_candidates")))
+  private[graft] def recallAudit(keys: Option[DataFrame],
+      cand: Option[DataFrame], legs: Seq[Leg], truth: DataFrame): DataFrame = {
+    val nCand =
+      cand.map(_.groupBy("query_id").agg(count(lit(1)).as("n_candidates")))
     val matches = legs.map(l =>
-      l.top.join(broadcast(truth.withColumn("hit", lit(1))), Seq("query_id", "vec_id"), "left")
+      l.top.join(broadcast(truth.withColumn("hit", lit(1))),
+          Seq("query_id", "vec_id"), "left")
         .groupBy("query_id")
         .agg(sum("hit").as(l.nMatch), l.fp.map(sum("vec_id").as(_)).toSeq: _*))
     val tf = truth.groupBy("query_id").agg(sum("vec_id").as("truth_fp"))
     val parts = keys.toSeq ++ nCand ++ matches
     val counts = nCand.map(_ => "n_candidates").toSeq ++ legs.map(_.nMatch)
-    parts.tail.foldLeft(parts.head)((l, r) => l.join(broadcast(r), Seq("query_id"), "left"))
+    parts.tail.foldLeft(parts.head)((l, r) =>
+      l.join(broadcast(r), Seq("query_id"), "left"))
       .join(broadcast(tf), Seq("query_id"))
       .select(keys.fold(Seq(col("query_id")))(_.columns.toSeq.map(col)) ++
         counts.map(c => coalesce(col(c), lit(0L)).as(c)) ++
@@ -637,7 +643,8 @@ object Similarity {
   private def pqIndex(frame: DataFrame, codebooks: Seq[Array[Long]], sub: Int,
                       ksub: Int, src: String): DataFrame =
     pqEncode(frame, codebooks, sub, ksub, src)
-      .select(col("vec_id") +: col("cluster") +: numbered("code", codebooks.size): _*)
+      .select(col("vec_id") +: col("cluster") +:
+        numbered("code", codebooks.size): _*)
       .localCheckpoint()
 
   /** nprobe = 1 IVF-PQ serving with its recall audit (q157/q160 and their
