@@ -789,9 +789,12 @@ object Similarity {
       .select(col("vec_id"), col("cluster"))
       .localCheckpoint()
     // the add path: quantize + assign ONLY the batch against the same
-    // literal centroids — map-side, batch-sized
+    // literal centroids — map-side, batch-sized. A model trained on no
+    // rows has no list to add to (its distances, so the cluster, are
+    // null): the report is then empty, as the oracle's.
     val added = assignCols(quantized(batch), st.ca, st.d, st.k)
       .select(col("vec_id"), col("cluster"))
+      .filter(col("cluster").isNotNull)
     val baseAgg = index.groupBy("cluster").agg(
       count(lit(1)).as("n_base"), sum("vec_id").as("base_id_sum"))
     val addAgg = added.groupBy("cluster").agg(

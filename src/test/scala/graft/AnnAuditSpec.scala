@@ -41,6 +41,13 @@ class AnnAuditSpec extends SparkSpec {
     assert(wrong.isEmpty)
   }
 
+  test("an incremental add to an index trained on no rows reports no list") {
+    // one row, vec_id 0: the base (vec_id % 10 != 0) is empty
+    val one = Similarity.plantedEmbeddings(
+      spark.range(1).select(col("id").as("vec_id")))
+    assert(Similarity.ivfIncremental(one, 10, 3).count() == 0)
+  }
+
   test("the recall audit emits n_candidates = 0 and n_match = 0 for a " +
     "query whose probed list has no other member") {
     // query 1's list holds 11 and 12; query 2 is alone in its list
